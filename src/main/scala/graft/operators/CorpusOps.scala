@@ -468,8 +468,7 @@ object CorpusOps {
       admitCreateTables(st, docs)
       if (r.getLong(2) > 0L) {
         val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val nFiles = math.max(1L,
-          math.min(32L, r.getLong(2) / rowsPerFile + 1)).toInt
+        val nFiles = EventsOps.stageFiles(r.getLong(2), rowsPerFile)
         // four strict doc_id quarter-range slices (the q189 staging shape)
         val width = EventsOps.stageAligned(streamDir,
           EventsOps.slicedStages(docs, col("doc_id"), lo, hi, 4), nFiles)
@@ -679,16 +678,8 @@ object CorpusOps {
       st.create("contam", docs.limit(0).select(col("doc_id"),
         col("doc_id").as("bench_id"), col("doc_id").as("n_shared_grams")))
       val corpus = docs.filter(col("doc_id") >= 50)
-      val r = corpus.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          decontamIngestEpoch(st, bench, prune)(corpus.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-        }
+      EventsOps.idSlices(corpus, "doc_id", 4).foreach { case (batch, e) =>
+        decontamIngestEpoch(st, bench, prune)(batch, e)
       }
       // pinned: the store root is deleted in the finally below
       Dedup.pin(st.table("contam").orderBy("doc_id", "bench_id"))
@@ -728,12 +719,9 @@ object CorpusOps {
       st.create("contam", docs.limit(0).select(col("doc_id"),
         col("doc_id").as("bench_id"), col("doc_id").as("n_shared_grams")))
       val corpus = docs.filter(col("doc_id") >= 50)
-      val r = corpus.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, corpus, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          "q219_contam_sink")(
-          graft.streaming.ContamIngest.contamIngestSink(st, bench, prune))
+      EventsOps.stagedReplayDrive(s, corpus, "doc_id", rowsPerFile, slices,
+        "q219_contam_sink")(
+        graft.streaming.ContamIngest.contamIngestSink(st, bench, prune))
       // pinned: the store root is deleted in the finally below
       Dedup.pin(st.table("contam").orderBy("doc_id", "bench_id"))
     } finally {

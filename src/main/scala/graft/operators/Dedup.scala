@@ -161,26 +161,10 @@ object Dedup {
        |  WHERE CAST(i AS DOUBLE) / CAST(sa.n + sb.n - i AS DOUBLE) >= 0.8)""".stripMargin
   }
 
-  /** Spark side of [[lshPairsCtes]]: banded-LSH candidates, size-ratio
-    * pruned, exact-Jaccard verified at ≥ 0.8 — the scalable (RefinedWeb /
-    * FineWeb-shaped) near-dup pair generator, reused by q48 and as the
-    * edge source for q71's connected components. Memoized per
-    * (session, dir): the shingle/minhash frames inside carry `.cache()`,
-    * and rebuilding them per caller would pin redundant copies of the
-    * suite's largest intermediates in executor storage. */
-  // weak session keys: a stopped SparkSession (per-suite test sessions,
-  // repeated driver runs in one JVM) must stay collectible — a strong
-  // (session, dir) map would pin it plus its cached frames forever.
-  // Inputs are immutable driver-generated parquet, so no invalidation
-  // beyond session lifetime is needed.
-  private val lshPairsMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, MemoEntry]]()
-
   /** A memoized frame plus the storage it pinned: the RDD ids that
     * [[buildLshVerifiedPairs]]'s caches and localCheckpoint registered,
-    * captured so [[releaseLshCache]] can unpersist exactly those blocks
-    * (a localCheckpointed Dataset exposes no unpersist of its own). */
+    * captured so a release can unpersist exactly those blocks (a
+    * localCheckpointed Dataset exposes no unpersist of its own). */
   private[graft] final case class MemoEntry(df: DataFrame, rddIds: Set[Int])
 
   /** Run `build` and record which persistent RDDs it newly registered.
@@ -192,42 +176,25 @@ object Dedup {
     MemoEntry(df, (s.sparkContext.getPersistentRDDs.keySet -- before).toSet)
   }
 
+  // Inputs are immutable driver-generated parquet, so no invalidation
+  // beyond an explicit release is needed; releasing a dir unpersists
+  // exactly the RDDs its build pinned. Call release after rewriting the
+  // parquet under a previously-read directory, or from a long-lived
+  // session that is done with a corpus.
+  private[graft] val lshPairsMemo = new SessionMemo[MemoEntry](e => {
+    val sc = e.df.sparkSession.sparkContext
+    e.rddIds.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true)))
+  })
+
+  /** Spark side of [[lshPairsCtes]]: banded-LSH candidates, size-ratio
+    * pruned, exact-Jaccard verified at ≥ 0.8 — the scalable (RefinedWeb /
+    * FineWeb-shaped) near-dup pair generator, reused by q48 and as the
+    * edge source for q71's connected components. Memoized per
+    * (session, dir): the shingle/minhash frames inside carry `.cache()`,
+    * and rebuilding them per caller would pin redundant copies of the
+    * suite's largest intermediates in executor storage. */
   private[graft] def lshVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    lshPairsMemo.synchronized {
-      val perDir = {
-        val cur = lshPairsMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, MemoEntry]();
-               lshPairsMemo.put(s, m); m }
-      }
-      perDir.getOrElseUpdate(d,
-        trackedBuild(s, buildLshVerifiedPairs(s, d))).df
-    }
-
-  /** Drop memoized pair frames for `dir` (all sessions) AND unpersist the
-    * executor storage they pinned (shingle/minhash caches + the
-    * checkpointed pair blocks). Call after rewriting the parquet under a
-    * previously-read directory — the memo otherwise assumes
-    * driver-generated inputs are immutable and would serve pairs computed
-    * from the old files — or from a long-lived service session that is
-    * done with a corpus (the blocks otherwise live for the session). */
-  private[graft] def releaseLshCache(dir: String): Unit =
-    lshPairsMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- lshPairsMemo.values.asScala; e <- perDir.remove(dir);
-           sc = e.df.sparkSession.sparkContext; id <- e.rddIds)
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = true))
-    }
-
-  /** Release every memoized corpus (the session-shutdown hygiene hook). */
-  private[graft] def clearLshCache(): Unit =
-    lshPairsMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      lshPairsMemo.values.asScala.flatMap(_.keys).toSet[String]
-        .foreach(releaseLshCache)
-    }
-
-  private[graft] def invalidateLshCache(dir: String): Unit = releaseLshCache(dir)
+    lshPairsMemo(s, d)(trackedBuild(s, buildLshVerifiedPairs(s, d))).df
 
   /** (doc_id, band, bv) band keys of a signature frame carrying h0..h15.
     * ONE scan of the source: the 4 band keys explode from an in-row array
@@ -332,7 +299,7 @@ object Dedup {
   private[graft] val candTrace =
     new java.util.concurrent.ConcurrentLinkedQueue[Long]()
 
-  private def recordSkip(tag: String, rep: graft.sources.FileStats.ScanReport): Unit =
+  private[graft] def recordSkip(tag: String, rep: graft.sources.FileStats.ScanReport): Unit =
     if (sys.props.contains("graft.epochTrace")) {
       skipTrace.add((tag, rep.filesTotal, rep.filesRead)); ()
     }
@@ -920,29 +887,12 @@ object Dedup {
     IncrementalLshKernel(cand0, candTh, pairs, candCount)
   }
 
-  // weak session keys for the same reason as lshPairsMemo: a stopped
-  // session must stay collectible. The memo value is the store's ROOT PATH
-  // (a String), NOT the TableStore — a TableStore holds its SparkSession,
-  // and a WeakHashMap whose values strongly reach their own keys never
-  // collects anything. A fresh handle over the existing directory is free.
-  private val sigStoreMemo =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, String]]()
+  // q90's stored corpus signatures, built once per (session, dir)
+  private[graft] val sigStores = new SessionMemo.Stores("graft-sigstore")
 
   private def corpusStore(s: SparkSession, d: String): graft.sources.TableStore =
-    sigStoreMemo.synchronized {
-      val perDir = {
-        val cur = sigStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               sigStoreMemo.put(s, m); m }
-      }
-      val root = perDir.getOrElseUpdate(d, {
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-sigstore").toString)
-        buildSignatureStore(st, Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0))
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
+    sigStores(s, d) { st =>
+      buildSignatureStore(st, Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0))
     }
 
   /** Incremental dedup gate: corpus = doc_id % 5 ≠ 0 (signatures persisted
@@ -1621,8 +1571,7 @@ object Dedup {
       buildDedupState(st, docs.limit(0)) // empty state: the stream bootstraps it
       if (r.getLong(2) > 0L) {
         val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val nFiles = math.max(1L,
-          math.min(32L, r.getLong(2) / rowsPerFile + 1)).toInt
+        val nFiles = EventsOps.stageFiles(r.getLong(2), rowsPerFile)
         // slice rule (VERDICT r12 next #7, the q149/q187 StreamSliceHours
         // pattern): `slices` doc_id slices × nFiles aligned files,
         // default 2. Two epochs are
@@ -1712,19 +1661,11 @@ object Dedup {
     try {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildDedupState(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          dedupIngestEpoch(st)(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          // maintenance mid-run: collapse the 3-version chain and restore
-          // the prune layout; epochs 2-3 dedupe against the compacted store
-          if (e == 1) compactSignatureStore(st)
-        }
+      EventsOps.idSlices(docs, "doc_id", 4).foreach { case (batch, e) =>
+        dedupIngestEpoch(st)(batch, e)
+        // maintenance mid-run: collapse the 3-version chain and restore
+        // the prune layout; epochs 2-3 dedupe against the compacted store
+        if (e == 1) compactSignatureStore(st)
       }
       // serve phase joins the store-wide cut set against the whole corpus
       // — width from the full input volume, not the epoch's
@@ -1782,18 +1723,10 @@ object Dedup {
     try {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildDedupState(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          // no maintenance call anywhere: the policy inside the epoch
-          // fires whenever the chain reaches the configured trigger
-          dedupIngestEpoch(st)(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-        }
+      // no maintenance call anywhere: the policy inside the epoch fires
+      // whenever the chain reaches the configured trigger
+      EventsOps.idSlices(docs, "doc_id", 4).foreach { case (batch, e) =>
+        dedupIngestEpoch(st)(batch, e)
       }
       // serve phase is store-wide ⋈ corpus — full-volume width
       EventsOps.serveWidth(s, inBytes)

@@ -511,13 +511,10 @@ object DedupClusters {
     * store-proportional label state. Readback resolves the mapping
     * closure once, at query time. */
   // One cluster-maintained store per (session, dir), built by whichever
-  // of q203/q204 runs first — the corpusStore/lshPairsMemo discipline:
-  // the ingest is the expensive part, and both gates read the SAME state
-  // the way two dashboard queries share one warehouse table. Weak session
-  // keys + root-path values so a stopped session stays collectible.
-  private val clusterStoreMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  // of q203/q204 runs first: the ingest is the expensive part, and both
+  // gates read the SAME state the way two dashboard queries share one
+  // warehouse table.
+  private[graft] val clusterStores = new SessionMemo.Stores("graft-cluster-ingest")
 
   /** The documents table ingested as four doc_id-ordered epochs through
     * [[Dedup.clusterIngestEpoch]], with the q156 quality score carried as
@@ -525,21 +522,7 @@ object DedupClusters {
     * text is in hand; q204 never re-touches the corpus). */
   private def clusterIngestedStore(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    clusterStoreMemo.synchronized {
-      val perDir = {
-        val cur = clusterStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               clusterStoreMemo.put(s, m); m }
-      }
-      val root = perDir.getOrElseUpdate(d, {
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-cluster-ingest").toString)
-        ingestClusterEpochs(st, s, d, slices = 4)
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
-    }
+    clusterStores(s, d)(ingestClusterEpochs(_, s, d, slices = 4))
 
   /** Arrival-time per-doc metadata for the maintained aggregates, in the
     * clusterIngestEpoch sidecar shape (doc_id, kind, bkt, h, n):
@@ -588,27 +571,20 @@ object DedupClusters {
       .select("doc_id", "text", "source", "lang", "n_chars")
     Dedup.buildDedupState(st, docs.limit(0))
     st.create("card", cardRows(docs.limit(0)))
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    if (r.getLong(2) > 0L) {
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val step = (hi - lo) / slices + 1
-      (0 until slices).foreach { e =>
-        val batch = docs.filter(col("doc_id") >= lo + e * step &&
-          col("doc_id") < lo + (e + 1) * step)
-        Dedup.clusterIngestEpoch(st, meta = Some(clusterDocMeta))(batch, e.toLong)
-        st.appendBatch("card", e.toLong, cardRows(batch)); ()
-        // retention pin after epoch 1: the snapshot q221/q222 serve
-        // ("yesterday's corpus release"), carried through any later
-        // compaction's vacuum by the pin contract
-        if (e == 1) {
-          st.pinVersion("state", "epoch1")
-          st.pinVersion("card", "epoch1"); ()
-        }
-      }
-    } else {
+    def pinEpoch1(): Unit = {
       st.pinVersion("state", "epoch1")
       st.pinVersion("card", "epoch1"); ()
     }
+    val epochs = EventsOps.idSlices(docs, "doc_id", slices)
+    epochs.foreach { case (batch, e) =>
+      Dedup.clusterIngestEpoch(st, meta = Some(clusterDocMeta))(batch, e)
+      st.appendBatch("card", e, cardRows(batch))
+      // retention pin after epoch 1: the snapshot q221/q222 serve
+      // ("yesterday's corpus release"), carried through any later
+      // compaction's vacuum by the pin contract
+      if (e == 1) pinEpoch1()
+    }
+    if (epochs.isEmpty) pinEpoch1()
   }
 
   /** Probe seam: the q203 ingest at an arbitrary slice count over a
@@ -624,17 +600,6 @@ object DedupClusters {
       Dedup.clusterLabels(st).count()
     } finally EventsOps.rmTree(root)
   }
-
-  /** Drop the memoized cluster store for `dir` (all sessions) and delete
-    * its tempdir — the honest-timing hook ScaleBench's cold mode uses so
-    * q203 pays its full ingest at every measured scale (and the rewrite
-    * hook for anyone regenerating parquet under a previously-read dir). */
-  private[graft] def releaseClusterStore(dir: String): Unit =
-    clusterStoreMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- clusterStoreMemo.values.asScala; root <- perDir.remove(dir))
-        EventsOps.rmTree(java.nio.file.Paths.get(root))
-    }
 
   val q203 = QueryDef(
     "q203_incremental_cluster_ingest",
@@ -739,17 +704,14 @@ object DedupClusters {
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d)
       .select("doc_id", "text", "source", "lang", "n_chars")
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
     val root = java.nio.file.Files.createTempDirectory("graft-cluster-stream")
     try {
       val st = new graft.sources.TableStore(s, root.toString)
       Dedup.buildDedupState(st, docs.limit(0))
       st.create("card", cardRows(docs.limit(0)))
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, docs, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          sinkName)(graft.streaming.DedupIngest.clusterIngestSink(st,
-            meta = Some(clusterDocMeta), card = Some(("card", cardRows))))
+      EventsOps.stagedReplayDrive(s, docs, "doc_id", rowsPerFile, slices,
+        sinkName)(graft.streaming.DedupIngest.clusterIngestSink(st,
+          meta = Some(clusterDocMeta), card = Some(("card", cardRows))))
       // pinned frame: the store root is deleted in the finally below
       Dedup.pin(serve(st))
     } finally EventsOps.rmTree(root)
@@ -950,36 +912,26 @@ object DedupClusters {
       val cat = new graft.sources.ReleaseCatalog(catRoot.toString, s)
       Dedup.buildDedupState(st, docs.limit(0))
       st.create("card", cardRows(docs.limit(0)))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      var pinned = false
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val step = (hi - lo) / 4 + 1
-        (0 until 4).foreach { e =>
-          // the ingestClusterEpochs shape with the release swapped in for
-          // the two parallel pins, and BOTH tables' compaction forced hot
-          val batch = docs.filter(col("doc_id") >= lo + e * step &&
-            col("doc_id") < lo + (e + 1) * step)
-          Dedup.clusterIngestEpoch(st, meta = Some(clusterDocMeta))(batch, e.toLong)
-          st.appendBatch("card", e.toLong, cardRows(batch))
-          // the claim under gate is pin SURVIVAL: only the post-pin
-          // epochs need their policy compactions (each one's vacuum
-          // would reclaim the release's snapshots were they unpinned);
-          // pre-pin compactions would prove nothing and double the cost
-          if (e >= 2) {
-            Dedup.maybeAutoCompactClustered(s, st, "state",
-              Seq("kind", "bkt", "doc_id"), Some(2))
-            Dedup.maybeAutoCompactClustered(s, st, "card", Seq("doc_id"), Some(2))
-          }
-          if (e == 1) {
-            // ONE durable record binds the snapshot PAIR that ships as
-            // this corpus release — labels and card under one name
-            cat.pin("corpus-r1", Seq((st, "state"), (st, "card")))
-            pinned = true
-          }
+      val epochs = EventsOps.idSlices(docs, "doc_id", 4)
+      epochs.foreach { case (batch, e) =>
+        // the ingestClusterEpochs shape with the release swapped in for
+        // the two parallel pins, and BOTH tables' compaction forced hot
+        Dedup.clusterIngestEpoch(st, meta = Some(clusterDocMeta))(batch, e)
+        st.appendBatch("card", e, cardRows(batch))
+        // the claim under gate is pin SURVIVAL: only the post-pin
+        // epochs need their policy compactions (each one's vacuum
+        // would reclaim the release's snapshots were they unpinned);
+        // pre-pin compactions would prove nothing and double the cost
+        if (e >= 2) {
+          Dedup.maybeAutoCompactClustered(s, st, "state",
+            Seq("kind", "bkt", "doc_id"), Some(2))
+          Dedup.maybeAutoCompactClustered(s, st, "card", Seq("doc_id"), Some(2))
         }
+        // ONE durable record binds the snapshot PAIR that ships as
+        // this corpus release — labels and card under one name
+        if (e == 1) cat.pin("corpus-r1", Seq((st, "state"), (st, "card")))
       }
-      if (!pinned) cat.pin("corpus-r1", Seq((st, "state"), (st, "card")))
+      if (epochs.isEmpty) cat.pin("corpus-r1", Seq((st, "state"), (st, "card")))
       // serving reads the release's store-wide snapshots — full-volume width
       EventsOps.serveWidth(s, inBytes)
       val labels = Dedup.clusterLabelsFrom(cat.tableAt("corpus-r1", "state"))

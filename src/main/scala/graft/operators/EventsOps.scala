@@ -110,6 +110,29 @@ object EventsOps {
       case k => lo + (hi - lo) * k / slices
     }
 
+  /** (lo, hi, count) of the long column `key` over `df` in one agg job,
+    * or None for an empty frame. */
+  private[graft] def idRange(df: org.apache.spark.sql.DataFrame,
+      key: String): Option[(Long, Long, Long)] = {
+    val r = df.agg(min(key), max(key), count(lit(1))).head()
+    if (r.getLong(2) > 0L) Some((r.getLong(0), r.getLong(1), r.getLong(2))) else None
+  }
+
+  /** The direct-build epoch slicer: `df` cut into `slices` half-open
+    * `key` ranges [lo + e·step, lo + (e+1)·step), step =
+    * ⌊(hi − lo) / slices⌋ + 1, as (batch, epoch e) pairs in epoch order;
+    * no epochs for an empty frame. The q216/q229 two-epoch oracle and the q221/q222 `epoch1`
+    * pins encode exactly this cut, which differs from [[strictCuts]]
+    * (the staged replay's). */
+  private[graft] def idSlices(df: org.apache.spark.sql.DataFrame, key: String,
+      slices: Int): Seq[(org.apache.spark.sql.DataFrame, Long)] =
+    idRange(df, key).toSeq.flatMap { case (lo, hi, _) =>
+      val step = (hi - lo) / slices + 1
+      (0 until slices).map { e =>
+        (df.filter(col(key) >= lo + e * step && col(key) < lo + (e + 1) * step), e.toLong)
+      }
+    }
+
   /** The strict-sliced replay stages shared by the sliced gates
     * (q149/q187/q189/q191): one `(name, filtered df, modSec)` stage per
     * half-open cut range of `key`, in replay order. `prefix` keeps the
@@ -135,6 +158,12 @@ object EventsOps {
     else math.min(32L, math.max(2L,
       (hi - lo) / (sliceHours * 3600L * 1000000L) + 1)).toInt
 
+  /** Aligned files per replay stage: one more than the stage's whole
+    * `rowsPerFile` blocks when `rows` spread over `slices` stages,
+    * clamped to [1, 32]. */
+  private[graft] def stageFiles(rows: Long, rowsPerFile: Long, slices: Int = 1): Int =
+    math.max(1L, math.min(32L, rows / (rowsPerFile * slices) + 1)).toInt
+
   /** The shared staged-replay driver behind every streamed maintained-
     * store gate (q209 text index, q210 IVF lists, q218 chunk index, q219
     * contamination — VERDICT r16 next #7: the per-gate builders had
@@ -143,44 +172,45 @@ object EventsOps {
     * aligned parquet files, then drive `sink` through a REAL
     * `writeStream.foreachBatch` file-source replay (`maxFilesPerTrigger`
     * = stage width, AvailableNow), so micro-batch sessions, epoch ids
-    * and replay-on-restart are on the gated path. `nRows`/`rowsPerFile`
-    * size the per-stage file count (specs pass a tiny rowsPerFile to
-    * force the multi-file aligned-batch path); the 8-partition
-    * bounded-replay rule (q183) is applied on the stream's CLONED
-    * session only. Blocks until the replay drains; the staging dir is
-    * always removed. */
+    * and replay-on-restart are on the gated path. The `key` range and
+    * row count come from one [[idRange]] job (an empty `rows` drives
+    * nothing); the row count and `rowsPerFile` size the per-stage file
+    * count (specs pass a tiny rowsPerFile to force the multi-file
+    * aligned-batch path); the 8-partition bounded-replay rule (q183) is
+    * applied on the stream's CLONED session only. Blocks until the replay
+    * drains; the staging dir is always removed. */
   private[graft] def stagedReplayDrive(
       s: org.apache.spark.sql.SparkSession,
       rows: org.apache.spark.sql.DataFrame,
-      key: org.apache.spark.sql.Column,
-      lo: Long, hi: Long, nRows: Long,
+      key: String,
       rowsPerFile: Long, slices: Int, sinkName: String)(
-      sink: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit = {
-    val streamDir = java.nio.file.Files.createTempDirectory(s"graft-$sinkName")
-    try {
-      val nFiles = math.max(1L, math.min(32L, nRows / rowsPerFile + 1)).toInt
-      // bounded replay, volume-derived (the q183 rule's scale-adaptive
-      // form): width from the per-slice input estimate, floor 8
-      val epochWidth = replayWidth(s, planBytes(rows) / math.max(1, slices))
-      val width = stageAligned(streamDir,
-        slicedStages(rows, key, lo, hi, slices), nFiles)
-      s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-      val q = s.readStream.schema(rows.schema)
-        .option("maxFilesPerTrigger", width.toString)
-        .parquet(streamDir.toString)
-        .writeStream
-        .queryName(sinkName)
-        .outputMode("append")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-          batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-            epochWidth.toString)
-          sink(batch, epoch)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally rmTree(streamDir)
-  }
+      sink: (org.apache.spark.sql.DataFrame, Long) => Unit): Unit =
+    idRange(rows, key).foreach { case (lo, hi, nRows) =>
+      val streamDir = java.nio.file.Files.createTempDirectory(s"graft-$sinkName")
+      try {
+        val nFiles = stageFiles(nRows, rowsPerFile)
+        // bounded replay, volume-derived (the q183 rule's scale-adaptive
+        // form): width from the per-slice input estimate, floor 8
+        val epochWidth = replayWidth(s, planBytes(rows) / math.max(1, slices))
+        val width = stageAligned(streamDir,
+          slicedStages(rows, col(key), lo, hi, slices), nFiles)
+        s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
+        val q = s.readStream.schema(rows.schema)
+          .option("maxFilesPerTrigger", width.toString)
+          .parquet(streamDir.toString)
+          .writeStream
+          .queryName(sinkName)
+          .outputMode("append")
+          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
+            batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
+              epochWidth.toString)
+            sink(batch, epoch)
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      } finally rmTree(streamDir)
+    }
 
   /** Estimated bytes of a frame from optimizer statistics (for parquet
     * scans: the file bytes) — metadata only, no job. */
@@ -814,8 +844,7 @@ object EventsOps {
         // the scale-posture note above
         val hourUs = 3600L * 1000000L
         val slices = sliceCount(mn.getLong(2), rowsPerFile, lo, hi, sliceHours)
-        val filesPerSlice = math.max(1L,
-          math.min(32L, mn.getLong(2) / rowsPerFile / slices + 1)).toInt
+        val filesPerSlice = stageFiles(mn.getLong(2), rowsPerFile, slices)
         val width = stageAligned(streamDir,
           slicedStages(ev, unix_micros(col("ts")), lo, hi, slices),
           filesPerSlice)
@@ -1377,8 +1406,7 @@ object EventsOps {
     // maxFilesPerTrigger = that width keeps the four-batch boundary
     // exact. One file per batch at bench scale, identical to the
     // original single-file replay.
-    val nFiles = math.max(1L,
-      math.min(32L, mn.getLong(1) / rowsPerFile + 1)).toInt
+    val nFiles = stageFiles(mn.getLong(1), rowsPerFile)
     val hourUs = 3600L * 1000000L
     val isLate = col("event_id") % 7 === 0 &&
       expr("unix_micros(ts)") < mMicros - 4 * hourUs
@@ -1544,8 +1572,7 @@ object EventsOps {
         // slice; aligned staging pads every batch to the common file
         // width so the batch boundaries survive multi-file staging
         val slices = sliceCount(mn.getLong(2), rowsPerFile, lo, hi, sliceHours)
-        val filesPerSlice = math.max(1L,
-          math.min(32L, mn.getLong(2) / rowsPerFile / slices + 1)).toInt
+        val filesPerSlice = stageFiles(mn.getLong(2), rowsPerFile, slices)
         val width = stageAligned(streamDir,
           slicedStages(ev, unix_micros(col("ts")), lo, hi, slices, prefix = "a_") ++ Seq(
             ("b_flush", carriers(hi + 48 * hourUs), slices * 10),

@@ -34,51 +34,23 @@ object Extras {
     * (GC/eviction noise); a parquet round-trip costs one extra encode but
     * reads back through the scan path with sized splits and ZERO
     * long-lived JVM storage — deterministic cost, and release is a
-    * directory delete. Weak session keys, same contract as
-    * Dedup.lshVerifiedPairs: inputs are immutable driver-generated
-    * parquet, so no invalidation beyond session lifetime is needed. */
-  private final class GraphMemoEntry(val memoDir: java.nio.file.Path) {
+    * directory delete, which [[graphMemo]]'s release runs (and the JVM
+    * exit does for any dir still held). */
+  private[graft] final class GraphMemoEntry(val memoDir: java.nio.file.Path) {
     var items: Option[org.apache.spark.sql.DataFrame] = None
     var edges: Option[org.apache.spark.sql.DataFrame] = None
   }
 
-  private val graphMemo = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession,
-    scala.collection.mutable.Map[String, GraphMemoEntry]]()
-
-  /** Every memo dir ever created, independent of the session map — the
-    * JVM-exit safety net. The lifecycle API ([[releaseGraphMemo]]) is
-    * for long-lived service sessions; Bench/Verify/test JVMs never call
-    * it, and a parquet memo (unlike the pre-r10 localCheckpoint blocks)
-    * would otherwise outlive the JVM as permanent /tmp litter. rmTree on
-    * an already-released dir is a no-op. */
-  private val allMemoDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  sys.addShutdownHook {
-    allMemoDirs.forEach(p => EventsOps.rmTree(p))
-  }
+  private[graft] val graphMemo =
+    new SessionMemo[GraphMemoEntry](e => SessionMemo.deleteDir(e.memoDir))
 
   /** Memo parquet dir for `dir` in session `s`, if built (spec hook). */
   private[graft] def graphMemoDir(s: org.apache.spark.sql.SparkSession,
       d: String): Option[java.nio.file.Path] =
-    graphMemo.synchronized {
-      Option(graphMemo.get(s)).flatMap(_.get(d)).map(_.memoDir)
-    }
+    graphMemo.get(s, d).map(_.memoDir)
 
-  private def memoEntry(s: org.apache.spark.sql.SparkSession, d: String): GraphMemoEntry = {
-    val perDir = {
-      val cur = graphMemo.get(s)
-      if (cur != null) cur
-      else {
-        val m = scala.collection.mutable.Map[String, GraphMemoEntry]()
-        graphMemo.put(s, m); m
-      }
-    }
-    perDir.getOrElseUpdate(d, {
-      val memoDir = java.nio.file.Files.createTempDirectory("graft-graph-memo")
-      allMemoDirs.add(memoDir)
-      new GraphMemoEntry(memoDir)
-    })
-  }
+  private def memoEntry(s: org.apache.spark.sql.SparkSession, d: String): GraphMemoEntry =
+    graphMemo(s, d)(new GraphMemoEntry(SessionMemo.tempDir("graft-graph-memo")))
 
   /** Distinct (order, part) market baskets — what q141/q160 aggregate. */
   private def copurchaseItems(s: org.apache.spark.sql.SparkSession, d: String)
@@ -109,25 +81,6 @@ object Extras {
         e.edges = Some(df)
         df
       }
-    }
-
-  /** Drop the memoized co-purchase graph for `dir` (all sessions) and
-    * delete its parquet memo dir — the lifecycle hook a long-lived
-    * service session calls when done with a corpus; without it the edge
-    * list occupies local disk for the session lifetime. */
-  private[graft] def releaseGraphMemo(dir: String): Unit =
-    graphMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- graphMemo.values.asScala; e <- perDir.remove(dir))
-        EventsOps.rmTree(e.memoDir)
-    }
-
-  /** Release every memoized corpus graph (session-shutdown hygiene). */
-  private[graft] def clearGraphMemo(): Unit =
-    graphMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      graphMemo.values.asScala.flatMap(_.keys).toSet[String]
-        .foreach(releaseGraphMemo)
     }
 
   /** Explicit ROWS BETWEEN frame: 4-event moving average per user.

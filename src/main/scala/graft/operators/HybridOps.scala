@@ -220,35 +220,19 @@ object HybridOps {
     SearchOps.buildSearchIndex(idxSt, docs.limit(0))
     Similarity.buildIvfStore(ivfSt, vecs.limit(0))
     val cat = new graft.sources.ReleaseCatalog(catRoot, s)
-    val rd = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-    val rv = vecs.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
-    val slices = 4
-    var pinned = false
-    (0 until slices).foreach { e =>
-      // each table slices its OWN id range (the q216 cut formula);
-      // an empty table simply contributes empty epochs
-      if (rd.getLong(2) > 0L) {
-        val (lo, hi) = (rd.getLong(0), rd.getLong(1))
-        val step = (hi - lo) / slices + 1
-        SearchOps.indexIngestEpoch(idxSt, compactLimit = Some(2))(
-          docs.filter(col("doc_id") >= lo + e * step &&
-            col("doc_id") < lo + (e + 1) * step), e.toLong)
-      }
-      if (rv.getLong(2) > 0L) {
-        val (lo, hi) = (rv.getLong(0), rv.getLong(1))
-        val step = (hi - lo) / slices + 1
-        Similarity.ivfIngestEpoch(ivfSt, compactLimit = Some(2))(
-          vecs.filter(col("vec_id") >= lo + e * step &&
-            col("vec_id") < lo + (e + 1) * step), e.toLong)
-      }
+    // each table slices its OWN id range (the q216 cut formula); an
+    // empty table simply contributes no epochs
+    val docEpochs = EventsOps.idSlices(docs, "doc_id", 4)
+    val vecEpochs = EventsOps.idSlices(vecs, "vec_id", 4)
+    (0 until 4).foreach { e =>
+      docEpochs.lift(e).foreach { case (b, ep) =>
+        SearchOps.indexIngestEpoch(idxSt, compactLimit = Some(2))(b, ep) }
+      vecEpochs.lift(e).foreach { case (b, ep) =>
+        Similarity.ivfIngestEpoch(ivfSt, compactLimit = Some(2))(b, ep) }
       // ONE coordinated release across both stores — the snapshot
       // pair that served together, under one durable record
-      if (e == 1) {
-        cat.pin("yesterday", Seq((idxSt, "index"), (ivfSt, "ivf")))
-        pinned = true
-      }
+      if (e == 1) cat.pin("yesterday", Seq((idxSt, "index"), (ivfSt, "ivf")))
     }
-    if (!pinned) cat.pin("yesterday", Seq((idxSt, "index"), (ivfSt, "ivf")))
     cat
   }
 

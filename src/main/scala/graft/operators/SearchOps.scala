@@ -617,9 +617,7 @@ object SearchOps {
     val (df, rep) = st.scanSkippingValues("index",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "w", terms)
-    if (sys.props.contains("graft.epochTrace")) {
-      Dedup.skipTrace.add(("index.postings", rep.filesTotal, rep.filesRead)); ()
-    }
+    Dedup.recordSkip("index.postings", rep)
     df.filter(col("kind") === 0 && col("w").isin(terms: _*))
       .select("w", "doc_id", "tf")
   }
@@ -665,9 +663,7 @@ object SearchOps {
       val (df, rep) = st.scanSkippingIds("index",
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(1), Some(1))),
         "doc_id", ids)
-      if (sys.props.contains("graft.epochTrace")) {
-        Dedup.skipTrace.add(("index.doclen", rep.filesTotal, rep.filesRead)); ()
-      }
+      Dedup.recordSkip("index.doclen", rep)
       df.filter(col("kind") === 1).select(col("doc_id"), col("dl"))
     } else st.table("index").filter(col("kind") === 1)
       .select(col("doc_id"), col("dl"))
@@ -795,18 +791,11 @@ object SearchOps {
       val st = new graft.sources.TableStore(s, root.toString)
       val docs = Tables.documents(s, d).select("doc_id", "text")
       buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          val t0 = System.nanoTime()
-          indexIngestEpoch(st)(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          if (sys.props.contains("graft.epochTrace")) {
-            Dedup.epochTrace.add((e.toLong, (System.nanoTime() - t0) / 1e9)); ()
-          }
+      EventsOps.idSlices(docs, "doc_id", slices).foreach { case (batch, e) =>
+        val t0 = System.nanoTime()
+        indexIngestEpoch(st)(batch, e)
+        if (sys.props.contains("graft.epochTrace")) {
+          Dedup.epochTrace.add((e, (System.nanoTime() - t0) / 1e9)); ()
         }
       }
       bm25FromIndex(st, Seq("dup", "window"), 20).count()
@@ -828,72 +817,34 @@ object SearchOps {
       val st = new graft.sources.TableStore(s, root.toString)
       val docs = Tables.documents(s, d).select("doc_id", "text")
       buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          val t0 = System.nanoTime()
-          indexIngestEpoch(st, compactLimit = Some(2))(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          if (e == 0) { st.pinVersion("index", "epoch0"); () }
-          if (sys.props.contains("graft.epochTrace")) {
-            Dedup.epochTrace.add((e.toLong, (System.nanoTime() - t0) / 1e9)); ()
-          }
+      val epochs = EventsOps.idSlices(docs, "doc_id", slices)
+      epochs.foreach { case (batch, e) =>
+        val t0 = System.nanoTime()
+        indexIngestEpoch(st, compactLimit = Some(2))(batch, e)
+        if (e == 0) { st.pinVersion("index", "epoch0"); () }
+        if (sys.props.contains("graft.epochTrace")) {
+          Dedup.epochTrace.add((e, (System.nanoTime() - t0) / 1e9)); ()
         }
-        // the pin must have survived every compaction's vacuum
-        st.tableAtPin("index", "epoch0").count()
       }
+      // the pin must have survived every compaction's vacuum
+      if (epochs.nonEmpty) st.tableAtPin("index", "epoch0").count()
       bm25FromIndex(st, Seq("dup", "window"), 20).count()
     } finally EventsOps.rmTree(root)
   }
 
-  // One maintained index store per (session, dir) — the q203-family
-  // memo discipline: whichever of q206/q207 runs first pays the 4-epoch
-  // build, both serve from the same store (weak session keys, root-path
-  // values).
-  private val indexStoreMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  // One maintained index store per (session, dir): whichever of
+  // q206/q207 runs first pays the 4-epoch build, both serve from the
+  // same store.
+  private[graft] val indexStores = new SessionMemo.Stores("graft-search-index")
 
   private[graft] def maintainedIndex(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    indexStoreMemo.synchronized {
-      val perDir = {
-        val cur = indexStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               indexStoreMemo.put(s, m); m }
+    indexStores(s, d) { st =>
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+      buildSearchIndex(st, docs.limit(0))
+      EventsOps.idSlices(docs, "doc_id", 4).foreach { case (batch, e) =>
+        indexIngestEpoch(st)(batch, e)
       }
-      val root = perDir.getOrElseUpdate(d, {
-        val docs = Tables.documents(s, d).select("doc_id", "text")
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-search-index").toString)
-        buildSearchIndex(st, docs.limit(0))
-        val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-        if (r.getLong(2) > 0L) {
-          val (lo, hi) = (r.getLong(0), r.getLong(1))
-          val slices = 4
-          val step = (hi - lo) / slices + 1
-          (0 until slices).foreach { e =>
-            indexIngestEpoch(st)(docs.filter(
-              col("doc_id") >= lo + e * step &&
-                col("doc_id") < lo + (e + 1) * step), e.toLong)
-          }
-        }
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
-    }
-
-  /** Drop the memoized index store for `dir` (all sessions) and delete
-    * its tempdir — ScaleBench's cold-timing hook. */
-  private[graft] def releaseSearchIndex(dir: String): Unit =
-    indexStoreMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- indexStoreMemo.values.asScala; root <- perDir.remove(dir))
-        EventsOps.rmTree(java.nio.file.Paths.get(root))
     }
 
   /** q206: INCREMENTAL BM25 index maintenance — q101's ranked retrieval
@@ -954,15 +905,12 @@ object SearchOps {
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
     val storeRoot = java.nio.file.Files.createTempDirectory("graft-index-stream")
     try {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildSearchIndex(st, docs.limit(0))
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, docs, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          "q209_index_sink")(graft.streaming.IndexIngest.indexIngestSink(st))
+      EventsOps.stagedReplayDrive(s, docs, "doc_id", rowsPerFile, slices,
+        "q209_index_sink")(graft.streaming.IndexIngest.indexIngestSink(st))
       // pinned: the store root is deleted in the finally below
       Dedup.pin(bm25FromIndex(st, Seq("dup", "window"), 20))
     } finally EventsOps.rmTree(storeRoot)
@@ -988,16 +936,13 @@ object SearchOps {
       s: org.apache.spark.sql.SparkSession, d: String)
       : org.apache.spark.sql.DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
     val storeRoot = java.nio.file.Files.createTempDirectory("graft-chunk-stream")
     try {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildChunkIndex(st, docs.limit(0))
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, docs, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          "q218_chunkindex_sink")(
-          graft.streaming.IndexIngest.chunkIndexIngestSink(st))
+      EventsOps.stagedReplayDrive(s, docs, "doc_id", rowsPerFile, slices,
+        "q218_chunkindex_sink")(
+        graft.streaming.IndexIngest.chunkIndexIngestSink(st))
       // pinned: the store root is deleted in the finally below
       Dedup.pin(chunkBm25FromIndex(st, Seq("dup", "window"), 10))
     } finally EventsOps.rmTree(storeRoot)
@@ -1136,9 +1081,7 @@ object SearchOps {
     val (tfScan, rep) = st.scanSkippingValues("chunkindex",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "w", terms)
-    if (sys.props.contains("graft.epochTrace")) {
-      Dedup.skipTrace.add(("chunkindex.postings", rep.filesTotal, rep.filesRead)); ()
-    }
+    Dedup.recordSkip("chunkindex.postings", rep)
     val tf = Dedup.pin(tfScan
       .filter(col("kind") === 0 && col("w").isin(terms: _*))
       .select(col("doc_id"), col("chunk_id"), col("w"),
@@ -1153,9 +1096,7 @@ object SearchOps {
         val (df, lrep) = st.scanSkippingIds("chunkindex",
           Seq(graft.sources.FileStats.ColumnRange("kind", Some(1), Some(1))),
           "doc_id", ids)
-        if (sys.props.contains("graft.epochTrace")) {
-          Dedup.skipTrace.add(("chunkindex.lens", lrep.filesTotal, lrep.filesRead)); ()
-        }
+        Dedup.recordSkip("chunkindex.lens", lrep)
         df.filter(col("kind") === 1)
           .select(col("doc_id"), col("chunk_id"), col("start_tok"), col("dl"))
       } else idx.filter(col("kind") === 1)
@@ -1178,49 +1119,17 @@ object SearchOps {
       .orderBy(col("score").desc, col("doc_id"), col("chunk_id")).limit(k)
   }
 
-  // one maintained chunk store per (session, dir) — the q206 memo
-  // discipline (weak session keys, root-path values)
-  private val chunkStoreMemo =
-    new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  // one maintained chunk store per (session, dir), as for q206
+  private[graft] val chunkStores = new SessionMemo.Stores("graft-chunk-index")
 
   private def maintainedChunkIndex(s: org.apache.spark.sql.SparkSession,
       d: String): graft.sources.TableStore =
-    chunkStoreMemo.synchronized {
-      val perDir = {
-        val cur = chunkStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               chunkStoreMemo.put(s, m); m }
+    chunkStores(s, d) { st =>
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+      buildChunkIndex(st, docs.limit(0))
+      EventsOps.idSlices(docs, "doc_id", 4).foreach { case (batch, e) =>
+        chunkIndexIngestEpoch(st)(batch, e)
       }
-      val root = perDir.getOrElseUpdate(d, {
-        val docs = Tables.documents(s, d).select("doc_id", "text")
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-chunk-index").toString)
-        buildChunkIndex(st, docs.limit(0))
-        val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-        if (r.getLong(2) > 0L) {
-          val (lo, hi) = (r.getLong(0), r.getLong(1))
-          val slices = 4
-          val step = (hi - lo) / slices + 1
-          (0 until slices).foreach { e =>
-            chunkIndexIngestEpoch(st)(docs.filter(
-              col("doc_id") >= lo + e * step &&
-                col("doc_id") < lo + (e + 1) * step), e.toLong)
-          }
-        }
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
-    }
-
-  /** ScaleBench's cold-timing hook: drop the memoized chunk store for
-    * `dir` (all sessions) and delete its tempdir. */
-  private[graft] def releaseChunkIndex(dir: String): Unit =
-    chunkStoreMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- chunkStoreMemo.values.asScala; root <- perDir.remove(dir))
-        EventsOps.rmTree(java.nio.file.Paths.get(root))
     }
 
   /** q215: MAINTAINED chunk-BM25 index — q165's passage retrieval (the
@@ -1308,23 +1217,15 @@ object SearchOps {
     try {
       val st = new graft.sources.TableStore(s, root.toString)
       buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      var pinnedAny = false
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          // compactLimit = 2: every epoch's append trips a REAL policy
-          // compaction (+ vacuum) — the pin must carry the snapshot
-          // through them, which is exactly what this gate checks
-          indexIngestEpoch(st, compactLimit = Some(2))(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          if (e == 1) { st.pinVersion("index", "epoch1"); pinnedAny = true }
-        }
+      val epochs = EventsOps.idSlices(docs, "doc_id", 4)
+      epochs.foreach { case (batch, e) =>
+        // compactLimit = 2: every epoch's append trips a REAL policy
+        // compaction (+ vacuum) — the pin must carry the snapshot
+        // through them, which is exactly what this gate checks
+        indexIngestEpoch(st, compactLimit = Some(2))(batch, e)
+        if (e == 1) { st.pinVersion("index", "epoch1"); () }
       }
-      if (!pinnedAny) st.pinVersion("index", "epoch1") // empty-corpus shape
+      if (epochs.isEmpty) st.pinVersion("index", "epoch1") // empty-corpus shape
       // serve phase reads the store-wide snapshot — full-volume width
       EventsOps.serveWidth(s, inBytes)
       // pinned frame: the store root is deleted in the finally below
@@ -1367,21 +1268,13 @@ object SearchOps {
     try {
       val st = new graft.sources.TableStore(s, root.toString)
       buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
       var windowV = -1
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val slices = 4
-        val step = (hi - lo) / slices + 1
-        (0 until slices).foreach { e =>
-          indexIngestEpoch(st, compactLimit = Some(2),
-            retainVersions = Some(6))(docs.filter(
-            col("doc_id") >= lo + e * step &&
-              col("doc_id") < lo + (e + 1) * step), e.toLong)
-          // remember the BARE version number — no pin, no label; only
-          // the retention window carries it through epochs 2 and 3
-          if (e == 1) windowV = st.currentVersionOf("index")
-        }
+      EventsOps.idSlices(docs, "doc_id", 4).foreach { case (batch, e) =>
+        indexIngestEpoch(st, compactLimit = Some(2),
+          retainVersions = Some(6))(batch, e)
+        // remember the BARE version number — no pin, no label; only
+        // the retention window carries it through epochs 2 and 3
+        if (e == 1) windowV = st.currentVersionOf("index")
       }
       if (windowV < 0) windowV = st.currentVersionOf("index") // empty-corpus shape
       // serve phase reads the store-wide snapshot — full-volume width
@@ -1418,17 +1311,14 @@ object SearchOps {
     try {
       val st = new graft.sources.TableStore(s, root.toString)
       buildSearchIndex(st, docs.limit(0))
-      val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, docs, col("doc_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2),
-          EventsOps.OuterStageRowsPerFile, 4, "q231_pinned_index_sink") {
-          (batch, e) =>
-            indexIngestEpoch(st, compactLimit = Some(2))(batch, e)
-            // the pin is PART of the ingest: taken in the same
-            // micro-batch that published the post-epoch-1 version
-            if (e == 1L) { st.pinVersion("index", "epoch1"); () }
-        }
+      EventsOps.stagedReplayDrive(s, docs, "doc_id",
+        EventsOps.OuterStageRowsPerFile, 4, "q231_pinned_index_sink") {
+        (batch, e) =>
+          indexIngestEpoch(st, compactLimit = Some(2))(batch, e)
+          // the pin is PART of the ingest: taken in the same
+          // micro-batch that published the post-epoch-1 version
+          if (e == 1L) { st.pinVersion("index", "epoch1"); () }
+      }
       if (!st.pinnedVersions("index").contains("epoch1"))
         st.pinVersion("index", "epoch1") // empty-corpus shape
       // pinned frame: the store root is deleted in the finally below

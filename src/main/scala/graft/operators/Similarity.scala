@@ -879,9 +879,7 @@ object Similarity {
     val (lists, rep) = st.scanSkippingIds("ivf",
       Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
       "label", probed)
-    if (sys.props.contains("graft.epochTrace")) {
-      Dedup.skipTrace.add(("ivf.lists", rep.filesTotal, rep.filesRead)); ()
-    }
+    Dedup.recordSkip("ivf.lists", rep)
     val el = lists
       .filter(col("kind") === 0 && col("label").isin(probed.map(Long.box): _*))
       .select(col("vec_id"), col("label"), col("i"), col("xd").as("c"))
@@ -1112,53 +1110,22 @@ object Similarity {
       .orderBy("query_id", "rk")
   }
 
-  // one maintained list store per (session, dir) — the maintained-family
-  // memo discipline (weak session keys, root-path values)
-  private val ivfStoreMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String, String]]()
+  // one maintained list store per (session, dir), shared by the
+  // maintained-IVF gates
+  private[graft] val ivfStores = new SessionMemo.Stores("graft-ivf")
 
   private[graft] def maintainedIvf(s: SparkSession, d: String): graft.sources.TableStore =
-    ivfStoreMemo.synchronized {
-      val perDir = {
-        val cur = ivfStoreMemo.get(s)
-        if (cur != null) cur
-        else { val m = scala.collection.mutable.Map[String, String]();
-               ivfStoreMemo.put(s, m); m }
+    ivfStores(s, d) { st =>
+      val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
+      buildIvfStore(st, vecs.limit(0))
+      EventsOps.idSlices(vecs, "vec_id", 4).foreach { case (batch, e) =>
+        ivfIngestEpoch(st)(batch, e)
+        // maintenance mid-run: collapse the chain with the
+        // layout-preserving clustered compaction — the oracle gates
+        // across it (q201's discipline applied to the ANN lists)
+        if (e == 1)
+          st.compactClustered("ivf", Seq("kind", "label", "vec_id", "i"), 8)
       }
-      val root = perDir.getOrElseUpdate(d, {
-        val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-        val st = new graft.sources.TableStore(s,
-          java.nio.file.Files.createTempDirectory("graft-ivf").toString)
-        buildIvfStore(st, vecs.limit(0))
-        val r = vecs.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
-        if (r.getLong(2) > 0L) {
-          val (lo, hi) = (r.getLong(0), r.getLong(1))
-          val slices = 4
-          val step = (hi - lo) / slices + 1
-          (0 until slices).foreach { e =>
-            ivfIngestEpoch(st)(vecs.filter(
-              col("vec_id") >= lo + e * step &&
-                col("vec_id") < lo + (e + 1) * step), e.toLong)
-            // maintenance mid-run: collapse the chain with the
-            // layout-preserving clustered compaction — the oracle gates
-            // across it (q201's discipline applied to the ANN lists)
-            if (e == 1)
-              st.compactClustered("ivf", Seq("kind", "label", "vec_id", "i"), 8)
-          }
-        }
-        st.rootDir
-      })
-      new graft.sources.TableStore(s, root)
-    }
-
-  /** ScaleBench's cold-timing hook: drop the memoized list store for
-    * `dir` (all sessions) and delete its tempdir. */
-  private[graft] def releaseIvfStore(dir: String): Unit =
-    ivfStoreMemo.synchronized {
-      import scala.jdk.CollectionConverters._
-      for (perDir <- ivfStoreMemo.values.asScala; root <- perDir.remove(dir))
-        EventsOps.rmTree(java.nio.file.Paths.get(root))
     }
 
   /** q208: MAINTAINED IVF index — q51's probe-1 ANN served from inverted
@@ -1190,15 +1157,12 @@ object Similarity {
       rowsPerFile: Long = EventsOps.OuterStageRowsPerFile, slices: Int = 2)(
       s: SparkSession, d: String): DataFrame = {
     val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    val r = vecs.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
     val storeRoot = java.nio.file.Files.createTempDirectory("graft-ivf-stream")
     try {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildIvfStore(st, vecs.limit(0))
-      if (r.getLong(2) > 0L)
-        EventsOps.stagedReplayDrive(s, vecs, col("vec_id"),
-          r.getLong(0), r.getLong(1), r.getLong(2), rowsPerFile, slices,
-          "q210_ivf_sink")(graft.streaming.IndexIngest.ivfIngestSink(st))
+      EventsOps.stagedReplayDrive(s, vecs, "vec_id", rowsPerFile, slices,
+        "q210_ivf_sink")(graft.streaming.IndexIngest.ivfIngestSink(st))
       // pinned: the store root is deleted in the finally below
       Dedup.pin(ivfProbe(st, nQueries = 20, k = 3))
     } finally EventsOps.rmTree(storeRoot)
@@ -1240,9 +1204,7 @@ object Similarity {
       val (lists, rep) = st.scanSkippingIds("ivf",
         Seq(graft.sources.FileStats.ColumnRange("kind", Some(0), Some(0))),
         "label", labels)
-      if (sys.props.contains("graft.epochTrace")) {
-        Dedup.skipTrace.add((tag, rep.filesTotal, rep.filesRead)); ()
-      }
+      Dedup.recordSkip(tag, rep)
       lists.filter(col("kind") === 0 && col("label").isin(labels.map(Long.box): _*))
         .select(col("vec_id"), col("label"), col("i"), col("xd"))
     }
@@ -1947,19 +1909,17 @@ object Similarity {
     "q235_streamed_recluster",
     streamedReclusterOracleSql) { (s, d) =>
     val vecs = Tables.embeddings(s, d).select("vec_id", "label", "embedding")
-    val r = vecs.agg(min("vec_id"), max("vec_id"), count(lit(1))).head()
     val root = java.nio.file.Files.createTempDirectory("graft-ivf-stream-recluster")
     try {
       val st = new graft.sources.TableStore(s, root.toString)
       buildIvfStore(st, vecs.limit(0))
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
+      EventsOps.idRange(vecs, "vec_id").foreach { case (lo, hi, _) =>
         val k = vecs.agg(max("label")).head().getAs[Number](0).intValue() + 1
         val drifted = vecs.withColumn("label",
           when(col("vec_id") > lo + (hi - lo) * 2 / 4 && col("vec_id") % 5 === 0,
             (col("label") + 1) % k).otherwise(col("label")))
-        EventsOps.stagedReplayDrive(s, drifted, col("vec_id"),
-          lo, hi, r.getLong(2), EventsOps.OuterStageRowsPerFile, 4,
+        EventsOps.stagedReplayDrive(s, drifted, "vec_id",
+          EventsOps.OuterStageRowsPerFile, 4,
           "q235_recluster_sink")(streamedReclusterSink(st))
       }
       // pinned frame: the store root is deleted in the finally below

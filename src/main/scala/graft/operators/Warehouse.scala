@@ -364,8 +364,7 @@ object Warehouse {
       val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))),
         count(lit(1))).head()
       val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val nFiles = math.max(1L,
-        math.min(32L, r.getLong(2) / rowsPerFile + 1)).toInt
+      val nFiles = EventsOps.stageFiles(r.getLong(2), rowsPerFile)
       // four strict quarter-range slices, width-aligned by stageAligned
       // (a slice whose rows fit fewer parquet parts — empty partitions
       // are skipped by the writer — is padded, so maxFilesPerTrigger
@@ -442,8 +441,7 @@ object Warehouse {
       st.create("ev", ev.limit(0))
       if (r.getLong(2) > 0L) {
         val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val nFiles = math.max(1L, math.min(32L,
-          r.getLong(2) / EventsOps.OuterStageRowsPerFile + 1)).toInt
+        val nFiles = EventsOps.stageFiles(r.getLong(2), EventsOps.OuterStageRowsPerFile)
         val width = EventsOps.stageAligned(streamDir,
           EventsOps.slicedStages(ev, unix_micros(col("ts")), lo, hi, 4), nFiles)
         val sinkName = "q200_compact_sink"

@@ -30,6 +30,21 @@ class EventsOpsSpec extends SparkSpec {
     rows.count(_._2 == 0L) should be > 0
   }
 
+  test("idSlices: none when empty, disjoint cover of the input, oracle's two-epoch cut") {
+    val docs = graft.core.Tables.documents(spark, dir).select("doc_id", "text")
+    operators.EventsOps.idSlices(docs.limit(0), "doc_id", 4) shouldBe empty
+    val slices = operators.EventsOps.idSlices(docs, "doc_id", 4)
+    slices should have length 4
+    slices.map(_._2) shouldBe Seq(0L, 1L, 2L, 3L)
+    val ids = slices.map(_._1.select("doc_id").collect().map(_.getLong(0)).toSeq)
+    val all = docs.select("doc_id").collect().map(_.getLong(0)).toSeq
+    ids.flatten.size shouldBe ids.flatten.toSet.size // disjoint
+    ids.flatten.sorted shouldBe all.sorted // union is the input
+    // slices 0-1 = the q216/q229 oracle's two-epoch prefix predicate
+    val (lo, hi) = (all.min, all.max)
+    (ids(0) ++ ids(1)).sorted shouldBe all.filter(_ < lo + 2 * ((hi - lo) / 4 + 1)).sorted
+  }
+
   test("streaming gates leave /tmp flat: staging dirs cleaned up across repeated runs") {
     def stageDirs(): Set[String] = {
       val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))

@@ -1,12 +1,13 @@
 package graft
 
-import graft.operators.{Dedup, Extras}
+import graft.operators.{Dedup, Extras, SearchOps, SessionMemo, Similarity}
 
 /** Memo lifecycle (VERDICT r5 #6): the localCheckpoint blocks behind the
-  * LSH pair memo and the co-purchase graph memo must be releasable — a
-  * long-lived service session otherwise accretes executor storage per
-  * corpus it ever touched. Release must drop storage back to the
-  * pre-build baseline AND a rebuild after release must still work. */
+  * LSH pair memo, the co-purchase graph memo and the maintained stores
+  * must be releasable — a long-lived service session otherwise accretes
+  * executor storage and disk per corpus it ever touched. Release must
+  * drop storage back to the pre-build baseline AND a rebuild after
+  * release must still work. */
 class MemoLifecycleSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
@@ -15,20 +16,20 @@ class MemoLifecycleSpec extends SparkSpec {
       .keySet.toSet
 
   test("releaseLshCache unpersists the pair memo's blocks back to baseline") {
-    Dedup.clearLshCache() // isolate from suites that already built the memo
+    SessionMemo.clearAll() // isolate from suites that already built memos
     val baseline = persistedIds
     val n1 = Dedup.lshVerifiedPairs(spark, sf).count()
     (persistedIds -- baseline) should not be empty
-    Dedup.releaseLshCache(sf)
+    Dedup.lshPairsMemo.release(sf)
     (persistedIds -- baseline) shouldBe empty
     // rebuild after release still answers, repinning storage
     Dedup.lshVerifiedPairs(spark, sf).count() shouldBe n1
-    Dedup.releaseLshCache(sf)
+    Dedup.lshPairsMemo.release(sf)
     (persistedIds -- baseline) shouldBe empty
   }
 
   test("releaseGraphMemo deletes the parquet graph memo and a rebuild still answers") {
-    Extras.clearGraphMemo()
+    Extras.graphMemo.clear()
     Extras.graphMemoDir(spark, sf) shouldBe None
     val n1 = Extras.q154.build(spark, sf).count()
     // the memo is parquet on local disk (no long-lived JVM storage): the
@@ -38,16 +39,16 @@ class MemoLifecycleSpec extends SparkSpec {
     java.nio.file.Files.exists(memoDir.get) shouldBe true
     // and the build leaves NO persistent RDD blocks behind (the r9 memo
     // pinned block-manager storage; variance fix = zero JVM residency)
-    Extras.releaseGraphMemo(sf)
+    Extras.graphMemo.release(sf)
     Extras.graphMemoDir(spark, sf) shouldBe None
     java.nio.file.Files.exists(memoDir.get) shouldBe false
     Extras.q154.build(spark, sf).count() shouldBe n1
-    Extras.releaseGraphMemo(sf)
+    Extras.graphMemo.release(sf)
     Extras.graphMemoDir(spark, sf) shouldBe None
   }
 
   test("graph memo components are lazy: cold q141 builds items but NOT the edge self-join") {
-    Extras.clearGraphMemo()
+    Extras.graphMemo.clear()
     Extras.q141.build(spark, sf).count() should be > 0L
     val memoDir = Extras.graphMemoDir(spark, sf)
     memoDir should not be None
@@ -58,24 +59,32 @@ class MemoLifecycleSpec extends SparkSpec {
     // an edge consumer then builds edges into the SAME memo dir
     Extras.q161.build(spark, sf).count() should be > 0L
     java.nio.file.Files.exists(memoDir.get.resolve("edges.parquet")) shouldBe true
-    Extras.releaseGraphMemo(sf)
+    Extras.graphMemo.release(sf)
   }
 
-  test("store-memo release hooks are idempotent and a rebuild still serves exactly") {
-    import graft.operators.{SearchOps, Similarity}
-    // index store (q206 family): release drops the tempdir-backed memo;
+  test("releaseAll deletes every memoized store root; rebuilds serve the same rows") {
+    // (gate, the store memo it builds through): q90's signature store
+    // had no release hook of its own before SessionMemo
+    val cases = Seq(
+      (Dedup.q90, Dedup.sigStores),
+      (SearchOps.q206, SearchOps.indexStores),
+      (Similarity.q208, Similarity.ivfStores))
+    def rows(q: graft.core.QueryDef) = q.build(spark, sf).collect().map(_.toSeq).toSeq
+    val before = cases.map { case (q, _) => rows(q) }
+    val roots = cases.map { case (q, memo) =>
+      withClue(q.name) { memo.root(spark, sf) should not be None }
+      java.nio.file.Paths.get(memo.root(spark, sf).get)
+    }
+    roots.foreach(r => withClue(r) { java.nio.file.Files.exists(r) shouldBe true })
+    SessionMemo.releaseAll(sf)
+    SessionMemo.releaseAll(sf) // idempotent on an already-released dir
+    SessionMemo.releaseAll("/nonexistent") // a never-memoized dir is a no-op
+    cases.foreach { case (q, memo) => withClue(q.name) { memo.root(spark, sf) shouldBe None } }
+    roots.foreach(r => withClue(r) { java.nio.file.Files.exists(r) shouldBe false })
     // the next gate call pays a fresh build and must answer identically
-    val before = SearchOps.q206.build(spark, sf).collect().map(_.toSeq)
-    SearchOps.releaseSearchIndex(sf)
-    SearchOps.releaseSearchIndex(sf) // idempotent on an already-released dir
-    SearchOps.q206.build(spark, sf).collect().map(_.toSeq).toSeq shouldBe before.toSeq
-    // ivf store (q208): same contract
-    val ivfBefore = Similarity.q208.build(spark, sf).collect().map(_.toSeq)
-    Similarity.releaseIvfStore(sf)
-    Similarity.releaseIvfStore(sf)
-    Similarity.q208.build(spark, sf).collect().map(_.toSeq).toSeq shouldBe ivfBefore.toSeq
-    // releases of a never-memoized dir are safe no-ops
-    SearchOps.releaseChunkIndex("/nonexistent")
-    graft.operators.DedupClusters.releaseClusterStore("/nonexistent")
+    val after = cases.map { case (q, _) => rows(q) }
+    after.map(_.size) shouldBe before.map(_.size)
+    after shouldBe before
+    SessionMemo.releaseAll(sf)
   }
 }
