@@ -8,15 +8,15 @@ import org.apache.spark.sql.SparkSession
   * constant per epoch while the signature store GROWS by one batch per
   * epoch, so a flat per-epoch wall demonstrates epoch cost tracks BATCH
   * size, not accumulated store size — the property the r12 kernel lost
-  * (store-proportional ~31 s/epoch by epoch 4 at sf0.1).
+  * (store-proportional ~31 s/epoch by epoch 4 at sf0.1). The walls come
+  * from the table-tagged `Dedup.epochTrace` every maintained-store epoch
+  * writes to, kept for the probed store's table only (`state` for the
+  * dedup and cluster arms, `index` for the two index arms).
   *
   * Usage: runMain graft.EpochCostProbe [corpusDir] [artifact]
   * (default: the ScaleBench 10× replica at /tmp/graft_sf1, which must
   * already exist, and scale_r15_epoch.json). Env levers:
   *  - SPARK_GRAFT_EPOCH_SLICES: slice count (default 8);
-  *  - SPARK_GRAFT_EPOCH_FILES: sets `spark.graft.state.filesPerEpoch`
-  *    for the run — OVERRIDES the self-sizing write layout (see
-  *    Dedup.sizedStateFiles); leave unset to probe the default;
   *  - SPARK_GRAFT_EPOCH_COMPACT: sets
   *    `spark.graft.state.autoCompactVersions` (chain-length trigger of
   *    the auto-compaction policy; unset = the library default);
@@ -41,7 +41,6 @@ object EpochCostProbe {
     val dir = args.headOption.getOrElse("/tmp/graft_sf1")
     val artifact = if (args.length > 1) args(1) else "scale_r15_epoch.json"
     val slices = sys.env.get("SPARK_GRAFT_EPOCH_SLICES").map(_.toInt).getOrElse(8)
-    val filesPerEpoch = sys.env.get("SPARK_GRAFT_EPOCH_FILES").map(_.toInt)
     val compactEvery = sys.env.get("SPARK_GRAFT_EPOCH_COMPACT").map(_.toInt)
     val spark = SparkSession.builder()
       .master("local[32]")
@@ -52,8 +51,6 @@ object EpochCostProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    filesPerEpoch.foreach(n =>
-      spark.conf.set("spark.graft.state.filesPerEpoch", n.toString))
     compactEvery.foreach(n =>
       spark.conf.set("spark.graft.state.autoCompactVersions", n.toString))
     // dense remap via the suite's own distributed global index (range
@@ -120,7 +117,10 @@ object EpochCostProbe {
       while (it.hasNext) b += it.next()
       b.toSeq
     }
-    val epochs = drain(operators.Dedup.epochTrace).sortBy(_._1)
+    // the trace carries every store's epochs; keep the probed store's
+    val table = if (op.endsWith("index")) "index" else "state"
+    val epochs = drain(operators.Dedup.epochTrace)
+      .collect { case (t, e, sec) if t == table => (e, sec) }.sortBy(_._1)
     val body = epochs.map { case (e, s) => s"""  {"epoch": $e, "sec": ${num(s, 2)}}""" }
       .mkString("[\n", ",\n", "\n]")
     // the pruned store's file-skip evidence: every pruned store read's
@@ -141,7 +141,6 @@ object EpochCostProbe {
     }
     val doc =
       s"""{"probe": "$probeName", "corpus": "$dir", "slices": $slices,
-         | "files_per_epoch": ${filesPerEpoch.map(_.toString).getOrElse("\"auto\"")},
          | "auto_compact_versions": ${compactEvery.map(_.toString).getOrElse("\"default\"")},
          | "dense_ids": ${sys.env.contains("SPARK_GRAFT_EPOCH_DENSE")},
          | "replica_salt": ${sys.env.contains("SPARK_GRAFT_EPOCH_SALT")},

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Per-query measurement harness for the optimization rounds: run the
   * named queries (args) against SPARK_GRAFT_SF_DIR with the epoch trace
-  * on, timing each run and draining the per-epoch walls, so a slow
+  * on, timing each run and draining the per-epoch walls (printed as
+  * `table:eN=sec`, so interleaved stores stay apart), so a slow
   * maintained-store gate decomposes into its epoch/maintenance/serve
   * parts instead of one opaque number. Same session shape as Bench.
   *
@@ -95,12 +96,12 @@ object QueryProbe {
           }
         }
         val epochs = {
-          val b = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
+          val b = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Double)]
           var e = operators.Dedup.epochTrace.poll()
           while (e != null) { b += e; e = operators.Dedup.epochTrace.poll() }
-          b.sortBy(_._1)
+          b.sortBy(e => (e._1, e._2))
         }
-        val ep = epochs.map { case (e, t) => f"e$e=$t%.2f" }.mkString(" ")
+        val ep = epochs.map { case (tb, e, t) => f"$tb:e$e=$t%.2f" }.mkString(" ")
         println(f"[probe] $name run$i: $dt%.2f s rows=$n epochs: $ep")
       }
     }

@@ -460,44 +460,17 @@ object CorpusOps {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(tokens(col("text"))).cast("long").as("ntok"))
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
     val storeRoot = java.nio.file.Files.createTempDirectory("graft-admit-store")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-admit-stage")
     try {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       admitCreateTables(st, docs)
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val nFiles = EventsOps.stageFiles(r.getLong(2), rowsPerFile)
-        // four strict doc_id quarter-range slices (the q189 staging shape)
-        val width = EventsOps.stageAligned(streamDir,
-          EventsOps.slicedStages(docs, col("doc_id"), lo, hi, 4), nFiles)
-        val sinkName = "q191_admit_sink"
-        s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-        val gate = new AdmissionGate(st, budget)
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", width.toString)
-          .parquet(streamDir.toString)
-          .writeStream
-          .queryName(sinkName)
-          .outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-            // bounded replay: the volume-derived q183 width for
-            // batch-bounded admission
-            batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-              EventsOps.replayWidth(s, EventsOps.planBytes(docs) / 4).toString)
-            gate.admit(batch, epoch)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      // four strict doc_id quarter-range slices (the q189 staging shape)
+      val gate = new AdmissionGate(st, budget)
+      EventsOps.stagedReplayDrive(s, docs, "doc_id", rowsPerFile, 4,
+        "q191_admit_sink")(gate.admit)
       // pin the result before the finally removes the store root
       admittedRows(st).orderBy("doc_id").localCheckpoint(true)
-    } finally {
-      EventsOps.rmTree(streamDir)
-      EventsOps.rmTree(storeRoot)
-    }
+    } finally EventsOps.rmTree(storeRoot)
   }
 
   /** Create the q191 admission log: ONE table carrying both the gate's
@@ -628,18 +601,18 @@ object CorpusOps {
   private[graft] def decontamIngestEpoch(st: graft.sources.TableStore,
       benchGrams: org.apache.spark.sql.DataFrame,
       benchPrune: Option[org.apache.spark.sql.Column])(
-      batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit = {
-    if (st.batchCommitted("contam", epoch)) return
-    val sh = batch
-      .withColumn("t", tokens(col("text")))
-      .withColumn("g", explode(shinglesN("t", 8)))
-      .select("doc_id", "g").distinct()
-    val pruned = benchPrune.map(sh.filter).getOrElse(sh)
-    val verdicts = pruned.join(broadcast(benchGrams), Seq("g"))
-      .groupBy("doc_id", "bench_id")
-      .agg(count(lit(1)).as("n_shared_grams"))
-    st.appendBatch("contam", epoch, verdicts); ()
-  }
+      batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit =
+    StoreEpoch(st, "contam", batch, epoch) { e =>
+      val sh = batch
+        .withColumn("t", tokens(col("text")))
+        .withColumn("g", explode(shinglesN("t", 8)))
+        .select("doc_id", "g").distinct()
+      val pruned = benchPrune.map(sh.filter).getOrElse(sh)
+      val verdicts = pruned.join(broadcast(benchGrams), Seq("g"))
+        .groupBy("doc_id", "bench_id")
+        .agg(count(lit(1)).as("n_shared_grams"))
+      e.st.appendBatch("contam", epoch, verdicts); ()
+    }
 
   /** The distinct benchmark gram set (bench_id, g) + its bloom-prune
     * literal, built once before ingest begins — the benchmark is
@@ -691,7 +664,7 @@ object CorpusOps {
 
   /** q219: decontamination under a REAL `writeStream` — q213's verdict
     * store built by Structured Streaming driving
-    * [[graft.streaming.ContamIngest.contamIngestSink]] over the shared
+    * [[decontamIngestEpoch]] as its foreachBatch sink over the shared
     * staged replay (VERDICT r16 next #3: the sink had a crash-injected
     * writeStream SPEC but no oracle gate drove it end-to-end), so the
     * stream wiring — micro-batch sessions, epoch ids, replay-on-restart
@@ -720,8 +693,7 @@ object CorpusOps {
         col("doc_id").as("bench_id"), col("doc_id").as("n_shared_grams")))
       val corpus = docs.filter(col("doc_id") >= 50)
       EventsOps.stagedReplayDrive(s, corpus, "doc_id", rowsPerFile, slices,
-        "q219_contam_sink")(
-        graft.streaming.ContamIngest.contamIngestSink(st, bench, prune))
+        "q219_contam_sink")(decontamIngestEpoch(st, bench, prune))
       // pinned: the store root is deleted in the finally below
       Dedup.pin(st.table("contam").orderBy("doc_id", "bench_id"))
     } finally {

@@ -1307,20 +1307,16 @@ object Dedup {
     * 2 epochs, q201's 4) stay at the floor and pay ZERO layout tax,
     * while a probe/deployment store ramps from its 4th batch on (the
     * early coarse layers become a vanishing fraction, and
-    * auto-compaction re-clusters them anyway). An explicit `spark.graft
-    * .state.filesPerEpoch` (read off `s` so a stream's cloned-session
-    * conf governs its own appends) still overrides — the
-    * reproducibility lever the probes use. */
-  private def sizedStateFiles(s: SparkSession, storeRows: Long,
-      batchRows: Long, candidates: Option[Long]): Int =
-    s.conf.getOption("spark.graft.state.filesPerEpoch").map(_.toInt).getOrElse {
-      val c = candidates.getOrElse(0L)
-      if (c <= 0L || batchRows <= 0L || storeRows < 4L * batchRows) StateFilesFloor
-      else {
-        val f = math.ceil(2.0 * batchRows * c / storeRows)
-        math.max(StateFilesFloor.toDouble, math.min(StateFilesCap.toDouble, f)).toInt
-      }
+    * auto-compaction re-clusters them anyway). */
+  private def sizedStateFiles(storeRows: Long, batchRows: Long,
+      candidates: Option[Long]): Int = {
+    val c = candidates.getOrElse(0L)
+    if (c <= 0L || batchRows <= 0L || storeRows < 4L * batchRows) StateFilesFloor
+    else {
+      val f = math.ceil(2.0 * batchRows * c / storeRows)
+      math.max(StateFilesFloor.toDouble, math.min(StateFilesCap.toDouble, f)).toInt
     }
+  }
 
   private[graft] def stateSig(state: DataFrame): DataFrame =
     state.filter(col("kind") === 2)
@@ -1371,12 +1367,15 @@ object Dedup {
     finally { sig.unpersist(); th.unpersist(); () }
   }
 
-  /** Per-epoch wall-clock trace of [[dedupIngestEpoch]], recorded when the
-    * `graft.epochTrace` system property is set. The q199 epoch-cost probe
+  /** Per-epoch wall-clock trace of every maintained-store epoch as
+    * (table, epoch, seconds), recorded by [[StoreEpoch]] when the
+    * `graft.epochTrace` system property is set. The epoch-cost probe
     * (VERDICT r12 next #3) reads per-epoch walls from here to show epoch
-    * cost tracks BATCH size, not accumulated store size. */
+    * cost tracks BATCH size, not accumulated store size; the table tag
+    * keeps interleaved stores (a hybrid gate's index and IVF epochs)
+    * apart. */
   private[graft] val epochTrace =
-    new java.util.concurrent.ConcurrentLinkedQueue[(Long, Double)]()
+    new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Double)]()
 
   /** The q199 per-epoch dedup-admission step, shared with the restart
     * spec. Batch docs check against EVERY previously seen doc's
@@ -1388,63 +1387,53 @@ object Dedup {
     * AND its cut verdicts as ONE kind-tagged [[stateFrame]] through ONE
     * ledgered append — verdicts become visible atomically with the
     * signatures that produced them. A restarted epoch re-offering a
-    * committed id no-ops BEFORE any LSH work runs (the body consults the
-    * store's exactly-once epoch ledger first — ADVICE r13; appendBatch's
-    * own ledger check remains the write-side authority). There is no
-    * partial-commit window to reason about: one table, one flip. */
-  private[graft] def dedupIngestEpoch(st0: graft.sources.TableStore)(
-      batch: DataFrame, epoch: Long): Unit = {
-    val t0 = System.nanoTime()
-    try dedupIngestEpochBody(st0)(batch, epoch)
-    finally if (sys.props.contains("graft.epochTrace")) {
-      epochTrace.add((epoch, (System.nanoTime() - t0) / 1e9)); ()
-    }
-  }
-
-  private def dedupIngestEpochBody(st0: graft.sources.TableStore)(
-      batch: DataFrame, epoch: Long): Unit = {
-    val s = batch.sparkSession
-    // re-home the store handle on the BATCH's session (the stream's clone
-    // when called from q199's foreachBatch) so the epoch's jobs plan with
-    // the stream-scoped conf — notably the 8-partition replay width —
-    // instead of the shared session's; a fresh handle over an existing
-    // directory is free, and the epoch ledger lives in the directory, not
-    // the handle (DedupIngestRestartSpec re-opens handles the same way)
-    val st = new graft.sources.TableStore(s, st0.rootDir)
-    // replay guard FIRST (ADVICE r13): a committed epoch must no-op
-    // without paying the batch shingling or any store scan
-    if (st.batchCommitted("state", epoch)) return
-    val (newSig, newTh) = {
-      val (sig, th) = signatureFrames(batch)
-      (sig.persist(), th.persist())
-    }
-    try {
-      // store size BEFORE this append (stats-sidecar metadata, no job) —
-      // the denominator of the self-sized write layout below
-      val storeRows = st.statsRowCount("state")
-      // one bounded collect yields BOTH the band-bucket file-prune keys
-      // and the local band relation the kernel broadcasts job-free
-      val bbl = batchBandsLocal(s, newSig)
-      val k = incrementalLshKernelPruned(s,
-        stateBandsPruned(st, bbl.map(_._1).getOrElse(batchBandKeys(newSig))),
-        stateThFor(st), newSig, newTh, batchBands = bbl.map(_._2))
+    * committed id no-ops BEFORE any LSH work runs ([[StoreEpoch]]'s
+    * replay guard — ADVICE r13). There is no partial-commit window to
+    * reason about: one table, one flip. */
+  private[graft] def dedupIngestEpoch(st: graft.sources.TableStore)(
+      batch: DataFrame, epoch: Long): Unit =
+    stateEpoch(st, batch, epoch) { (e, pairs, sig, th) =>
       // eager pin of the (tiny) cut set before building the state frame:
       // the append's range-partitioned write SAMPLES its input, so an
       // inline pairs pipeline would run the verify joins twice; the pin
       // runs them once and lets the kernel caches release before the
       // write (local blocks by default, reliable under
-      // spark.graft.checkpointDir — see [[pin]]).
-      val cut =
-        try pin(k.pairs.select(col("doc_b").as("doc_id")).distinct())
-        finally k.release()
+      // spark.graft.checkpointDir — see [[pin]])
+      stateFrame(sig, th, e.pin(pairs.select(col("doc_b").as("doc_id")).distinct()))
+    }
+
+  /** The epoch both LSH state stores (q199 dedup, q203 cluster) share:
+    * the batch's signature frames, the file-pruned incremental kernel
+    * against the stored state, then ONE self-sized [[stateLayout]]
+    * append of the rows `rows` makes of (epoch scope, the kernel's
+    * verified pairs, batch signatures, batch shingle hashes) — the pairs
+    * are only valid inside `rows`, which must materialize what it needs
+    * of them — and the state auto-compaction. */
+  private def stateEpoch(st0: graft.sources.TableStore, batch: DataFrame,
+      epoch: Long)(
+      rows: (StoreEpoch, DataFrame, DataFrame, DataFrame) => DataFrame): Unit =
+    StoreEpoch(st0, "state", batch, epoch) { e =>
+      val st = e.st
+      val (newSig, newTh) = {
+        val (sig, th) = signatureFrames(batch)
+        (e.persist(sig), e.persist(th))
+      }
+      // store size BEFORE this append (stats-sidecar metadata, no job) —
+      // the denominator of the self-sized write layout below
+      val storeRows = st.statsRowCount("state")
+      // one bounded collect yields BOTH the band-bucket file-prune keys
+      // and the local band relation the kernel broadcasts job-free
+      val bbl = batchBandsLocal(e.s, newSig)
+      val k = incrementalLshKernelPruned(e.s,
+        stateBandsPruned(st, bbl.map(_._1).getOrElse(batchBandKeys(newSig))),
+        stateThFor(st), newSig, newTh, batchBands = bbl.map(_._2))
+      val state = try rows(e, k.pairs, newSig, newTh) finally k.release()
       // batch size off the already-populated newTh cache (shingle rows
       // dominate the state frame, so they ARE the layout-relevant count)
-      val files = sizedStateFiles(s, storeRows, newTh.count(), k.candCount)
-      st.appendBatch("state", epoch,
-        stateLayout(stateFrame(newSig, newTh, cut), files))
-      maybeAutoCompact(s, st, k.candCount)
-    } finally { newSig.unpersist(); newTh.unpersist(); () }
-  }
+      val files = sizedStateFiles(storeRows, newTh.count(), k.candCount)
+      st.appendBatch("state", epoch, stateLayout(state, files))
+      maybeAutoCompact(e.s, st, k.candCount)
+    }
 
   /** Auto-compaction under continuous ingest (VERDICT r14 next #4): when
     * the state table's append chain reaches
@@ -1563,53 +1552,22 @@ object Dedup {
       slices: Int = 2)(
       s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select("doc_id", "text")
-    val r = docs.agg(min("doc_id"), max("doc_id"), count(lit(1))).head()
     val storeRoot = java.nio.file.Files.createTempDirectory("graft-dedup-ingest")
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-dedup-stage")
     try {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildDedupState(st, docs.limit(0)) // empty state: the stream bootstraps it
-      if (r.getLong(2) > 0L) {
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val nFiles = EventsOps.stageFiles(r.getLong(2), rowsPerFile)
-        // slice rule (VERDICT r12 next #7, the q149/q187 StreamSliceHours
-        // pattern): `slices` doc_id slices × nFiles aligned files,
-        // default 2. Two epochs are
-        // the minimum that exercises cross-epoch dedup (stored-vs-batch
-        // pairs over the epoch boundary) — the dominant per-epoch costs
-        // (batch shingling, verify checkpoint, state append, microbatch
-        // bookkeeping) are fixed per EPOCH, so the r12-era 4 slices paid
-        // 2× that toll for no additional coverage; corpora large enough to
-        // need finer batches raise nFiles via rowsPerFile instead.
-        // EpochCostProbe passes a higher slice count to watch per-epoch
-        // wall against a growing store.
-        val width = EventsOps.stageAligned(streamDir,
-          EventsOps.slicedStages(docs, col("doc_id"), lo, hi, slices), nFiles)
-        val sinkName = "q199_dedup_sink"
-        s.streams.active.filter(q => Option(q.name).contains(sinkName)).foreach(_.stop())
-        val q = s.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", width.toString)
-          .parquet(streamDir.toString)
-          .writeStream
-          .queryName(sinkName)
-          .outputMode("append")
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            // bounded replay: per-epoch shuffles carry batch/candidate-
-            // bounded rows only, so session width (32) over-slices them —
-            // the q183 replay rule, volume-derived. Set on the STREAM'S
-            // cloned session (batch.sparkSession), never the shared one,
-            // so a concurrent query on the caller's session keeps its
-            // width (ADVICE r12); the clone persists across epochs, the
-            // set is idempotent.
-            batch.sparkSession.conf.set("spark.sql.shuffle.partitions",
-              EventsOps.replayWidth(s,
-                EventsOps.planBytes(docs) / math.max(1, slices)).toString)
-            dedupIngestEpoch(st)(batch, epoch)
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      // slice rule (VERDICT r12 next #7, the q149/q187 StreamSliceHours
+      // pattern): `slices` doc_id slices, default 2. Two epochs are the
+      // minimum that exercises cross-epoch dedup (stored-vs-batch pairs
+      // over the epoch boundary) — the dominant per-epoch costs (batch
+      // shingling, verify checkpoint, state append, microbatch
+      // bookkeeping) are fixed per EPOCH, so the r12-era 4 slices paid 2×
+      // that toll for no additional coverage; corpora large enough to
+      // need finer batches raise the staged file count via rowsPerFile
+      // instead. EpochCostProbe passes a higher slice count to watch
+      // per-epoch wall against a growing store.
+      EventsOps.stagedReplayDrive(s, docs, "doc_id", rowsPerFile, slices,
+        "q199_dedup_sink")(dedupIngestEpoch(st))
       val cuts = stateCuts(st.table("state")).distinct()
       Tables.documents(s, d)
         .join(cuts, Seq("doc_id"), "left_anti")
@@ -1618,10 +1576,7 @@ object Dedup {
         .orderBy("doc_id")
         // pinned: the store root is deleted in the finally below
         .transform(pin)
-    } finally {
-      EventsOps.rmTree(streamDir)
-      EventsOps.rmTree(storeRoot)
-    }
+    } finally EventsOps.rmTree(storeRoot)
   }
 
   /** q201: dedup ingest ACROSS store maintenance — q199's admission
@@ -1869,7 +1824,7 @@ object Dedup {
     * pruned scan + semi-join + min per component), applies the step on
     * the driver, and stops when nothing moved. Same hop semantics and
     * round budget as the distributed loop; shared by the pruned resolve
-    * and [[clusterIngestEpochBody]]'s driver contraction. Returns
+    * and [[clusterIngestEpoch]]'s driver contraction. Returns
     * doc_id -> resolved component for every input pair. */
   private def driverResolveMappings(s: SparkSession,
       st: graft.sources.TableStore,
@@ -1955,32 +1910,10 @@ object Dedup {
     * epoch — shape (doc_id, kind, bkt, h, n) with kind >= 6 (kinds 0-5
     * belong to the engine) and bkt = 0; computed at arrival, the only
     * moment the text is in hand. */
-  private[graft] def clusterIngestEpoch(st0: graft.sources.TableStore,
+  private[graft] def clusterIngestEpoch(st: graft.sources.TableStore,
       meta: Option[DataFrame => DataFrame] = None)(
-      batch: DataFrame, epoch: Long): Unit = {
-    val t0 = System.nanoTime()
-    try clusterIngestEpochBody(st0, meta)(batch, epoch)
-    finally if (sys.props.contains("graft.epochTrace")) {
-      epochTrace.add((epoch, (System.nanoTime() - t0) / 1e9)); ()
-    }
-  }
-
-  private def clusterIngestEpochBody(st0: graft.sources.TableStore,
-      meta: Option[DataFrame => DataFrame])(
-      batch: DataFrame, epoch: Long): Unit = {
-    val s = batch.sparkSession
-    val st = new graft.sources.TableStore(s, st0.rootDir)
-    if (st.batchCommitted("state", epoch)) return
-    val (newSig, newTh) = {
-      val (sig, th) = signatureFrames(batch)
-      (sig.persist(), th.persist())
-    }
-    try {
-      val storeRows = st.statsRowCount("state")
-      val bbl = batchBandsLocal(s, newSig)
-      val k = incrementalLshKernelPruned(s,
-        stateBandsPruned(st, bbl.map(_._1).getOrElse(batchBandKeys(newSig))),
-        stateThFor(st), newSig, newTh, batchBands = bbl.map(_._2))
+      batch: DataFrame, epoch: Long): Unit =
+    stateEpoch(st, batch, epoch) { (e, pairs, newSig, newTh) =>
       // Bounded probe of the epoch's verified pairs: under the kernel's
       // broadcast ceiling the WHOLE merge-graph contraction — endpoint
       // resolution, mapping-chain walk, min-label fixpoint, absorbed-
@@ -1991,16 +1924,16 @@ object Dedup {
       // one pruned label scan, one pruned kind-5 scan per mapping hop,
       // the batch count and the append. Over the ceiling (band-value
       // skew): the distributed dataflow below, unchanged.
-      val pairsLocal: Either[DataFrame, Array[(Long, Long)]] =
-        try {
-          val a = k.pairs.select(col("doc_a"), col("doc_b"))
-            .limit(boundedProbeLimit(MaxBroadcastCandidateDocs)).collect()
-          if (a.length <= MaxBroadcastCandidateDocs)
-            Right(a.map(r => (r.getLong(0), r.getLong(1))))
-          else Left(pin(k.pairs.select(col("doc_a"), col("doc_b"))))
-        } finally k.release()
+      val pairsLocal: Either[DataFrame, Array[(Long, Long)]] = {
+        val a = pairs.select(col("doc_a"), col("doc_b"))
+          .limit(boundedProbeLimit(MaxBroadcastCandidateDocs)).collect()
+        if (a.length <= MaxBroadcastCandidateDocs)
+          Right(a.map(r => (r.getLong(0), r.getLong(1))))
+        else Left(e.pin(pairs.select(col("doc_a"), col("doc_b"))))
+      }
+      val st = e.st
       val (labelRows, maps) = pairsLocal match {
-        case Right(prs) => driverEpochContraction(s, st, prs)
+        case Right(prs) => driverEpochContraction(e.s, st, prs)
         case Left(pairs) =>
       val endpoints = pairs
         .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
@@ -2024,7 +1957,7 @@ object Dedup {
       val curStored = resolveThroughMappings(st, rawStored, epIds.isDefined)
       // current labels of this epoch's endpoints; never-paired docs
       // start at themselves
-      val cur = pin(endpoints.join(curStored, Seq("doc_id"), "left")
+      val cur = e.pin(endpoints.join(curStored, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("component"), col("doc_id")).as("component")))
       val compLinks = cur.filter(col("component") =!= col("doc_id"))
@@ -2038,7 +1971,7 @@ object Dedup {
       // (they were two separate pins — two scheduling barriers for two
       // tiny endpoint-bounded frames that the state write consumes
       // together anyway)
-      val lm = pin(endpoints.join(fin, Seq("doc_id"))
+      val lm = e.pin(endpoints.join(fin, Seq("doc_id"))
         .select(col("doc_id").as("a"), col("component").as("b"), lit(4).as("tag"))
       // one mapping row per component this epoch ABSORBED — and only
       // those: candidates are the pre-epoch LIVE components reachable
@@ -2060,14 +1993,8 @@ object Dedup {
       }
       // optional per-doc metadata (kinds >= 6) — batch-bounded expression
       // work at arrival time (the only moment the text is in hand)
-      val metaRows = meta.map(f => f(batch))
-      val files = sizedStateFiles(s, storeRows, newTh.count(), k.candCount)
-      st.appendBatch("state", epoch,
-        stateLayout(clusterStateFrame(newSig, newTh, labelRows, maps, metaRows),
-          files))
-      maybeAutoCompact(s, st, k.candCount)
-    } finally { newSig.unpersist(); newTh.unpersist(); () }
-  }
+      clusterStateFrame(newSig, newTh, labelRows, maps, meta.map(f => f(batch)))
+    }
 
   /** The under-ceiling cluster-epoch contraction on the driver: given the
     * epoch's verified pairs (bounded by the kernel's broadcast ceiling),
@@ -2077,7 +2004,7 @@ object Dedup {
     * the epoch's kind-4 label rows and kind-5 absorbed-component mappings
     * as LOCAL relations the state write consumes directly (no checkpoint
     * barriers). Semantics identical to the distributed dataflow in
-    * [[clusterIngestEpochBody]]'s skew branch: same label fixpoint (min
+    * [[clusterIngestEpoch]]'s skew branch: same label fixpoint (min
     * reachable seeded label), same mapping-candidate rule (distinct
     * resolved stored components whose final label is smaller). */
   private def driverEpochContraction(s: SparkSession,

@@ -165,7 +165,8 @@ object EventsOps {
     math.max(1L, math.min(32L, rows / (rowsPerFile * slices) + 1)).toInt
 
   /** The shared staged-replay driver behind every streamed maintained-
-    * store gate (q209 text index, q210 IVF lists, q218 chunk index, q219
+    * store gate (among them q191 admission log, q199 dedup admission,
+    * q209 text index, q210 IVF lists, q218 chunk index, q219
     * contamination — VERDICT r16 next #7: the per-gate builders had
     * re-implemented this scaffold and the replay discipline could
     * drift): stage `rows` as `slices` strict `key`-sliced stages of

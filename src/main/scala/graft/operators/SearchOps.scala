@@ -567,23 +567,9 @@ object SearchOps {
   private[graft] def indexIngestEpoch(st: graft.sources.TableStore,
       compactLimit: Option[Int] = None,
       retainVersions: Option[Int] = None)(
-      batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit = {
-    if (st.batchCommitted("index", epoch)) return
-    // persist before the range layout: repartitionByRange SAMPLES its
-    // child with a separate job, so an unpersisted postings frame would
-    // pay the tokenize+explode+aggregate subtree twice per epoch
-    val rows = indexRows(batch).persist()
-    try st.appendBatch("index", epoch,
-      Dedup.bucketLayout(rows, 8, "kind", "w", "doc_id"))
-    finally { rows.unpersist(); () }
-    // shared auto-compaction policy (one helper across the state/index/
-    // ivf stores — ADVICE r15 #3): layout-preserving collapse, ledger
-    // survives, stats handed to the CBO after the collapse; compactLimit
-    // and retainVersions thread per-caller policies without touching the
-    // session conf (VERDICT r16 ADVICE / r17 next #4)
-    Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "index",
-      Seq("kind", "w", "doc_id"), compactLimit, retainVersions)
-  }
+      batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit =
+    StoreEpoch(st, "index", batch, epoch)(_.appendClustered(indexRows(batch),
+      Seq("kind", "w", "doc_id"), compactLimit, retainVersions))
 
   private def indexRows(batch: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
@@ -792,11 +778,7 @@ object SearchOps {
       val docs = Tables.documents(s, d).select("doc_id", "text")
       buildSearchIndex(st, docs.limit(0))
       EventsOps.idSlices(docs, "doc_id", slices).foreach { case (batch, e) =>
-        val t0 = System.nanoTime()
         indexIngestEpoch(st)(batch, e)
-        if (sys.props.contains("graft.epochTrace")) {
-          Dedup.epochTrace.add((e, (System.nanoTime() - t0) / 1e9)); ()
-        }
       }
       bm25FromIndex(st, Seq("dup", "window"), 20).count()
     } finally EventsOps.rmTree(root)
@@ -819,12 +801,8 @@ object SearchOps {
       buildSearchIndex(st, docs.limit(0))
       val epochs = EventsOps.idSlices(docs, "doc_id", slices)
       epochs.foreach { case (batch, e) =>
-        val t0 = System.nanoTime()
         indexIngestEpoch(st, compactLimit = Some(2))(batch, e)
         if (e == 0) { st.pinVersion("index", "epoch0"); () }
-        if (sys.props.contains("graft.epochTrace")) {
-          Dedup.epochTrace.add((e, (System.nanoTime() - t0) / 1e9)); ()
-        }
       }
       // the pin must have survived every compaction's vacuum
       if (epochs.nonEmpty) st.tableAtPin("index", "epoch0").count()
@@ -880,7 +858,7 @@ object SearchOps {
     * thirteenth streaming gate. q206 proved "maintained store ≡
     * monolithic recomputation" with direct epoch calls; here the SAME
     * store is built by Structured Streaming driving
-    * [[graft.streaming.IndexIngest.indexIngestSink]] over a
+    * [[indexIngestEpoch]] as its foreachBatch sink over a
     * strictly-sliced staged file replay (the q199 discipline: doc_id
     * slices staged as aligned parquet files, `maxFilesPerTrigger` =
     * slice width, AvailableNow), so the stream wiring — micro-batch
@@ -910,7 +888,7 @@ object SearchOps {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildSearchIndex(st, docs.limit(0))
       EventsOps.stagedReplayDrive(s, docs, "doc_id", rowsPerFile, slices,
-        "q209_index_sink")(graft.streaming.IndexIngest.indexIngestSink(st))
+        "q209_index_sink")(indexIngestEpoch(st))
       // pinned: the store root is deleted in the finally below
       Dedup.pin(bm25FromIndex(st, Seq("dup", "window"), 20))
     } finally EventsOps.rmTree(storeRoot)
@@ -920,7 +898,7 @@ object SearchOps {
     * passage-retrieval sibling of q209 (VERDICT r16 next #3: q215 proved
     * "maintained chunk store ≡ monolithic recomputation" with direct
     * epoch calls; here the SAME store is built by Structured Streaming
-    * driving [[graft.streaming.IndexIngest.chunkIndexIngestSink]] over
+    * driving [[chunkIndexIngestEpoch]] as its foreachBatch sink over
     * the shared staged replay, so the stream wiring is on the
     * oracle-gated path). Serving is [[chunkBm25FromIndex]] — term-pruned
     * postings, matched-bounded chunk sidecar. Oracle = q165's monolithic
@@ -941,8 +919,7 @@ object SearchOps {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildChunkIndex(st, docs.limit(0))
       EventsOps.stagedReplayDrive(s, docs, "doc_id", rowsPerFile, slices,
-        "q218_chunkindex_sink")(
-        graft.streaming.IndexIngest.chunkIndexIngestSink(st))
+        "q218_chunkindex_sink")(chunkIndexIngestEpoch(st))
       // pinned: the store root is deleted in the finally below
       Dedup.pin(chunkBm25FromIndex(st, Seq("dup", "window"), 10))
     } finally EventsOps.rmTree(storeRoot)
@@ -1054,13 +1031,9 @@ object SearchOps {
     * auto-compaction policy collapses long chains layout-preservingly
     * and hands stats to the CBO. */
   private[graft] def chunkIndexIngestEpoch(st: graft.sources.TableStore)(
-      batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit = {
-    if (st.batchCommitted("chunkindex", epoch)) return
-    st.appendBatch("chunkindex", epoch,
-      Dedup.bucketLayout(chunkIndexRows(batch), 8, "kind", "w", "doc_id", "chunk_id"))
-    Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "chunkindex",
-      Seq("kind", "w", "doc_id", "chunk_id"))
-  }
+      batch: org.apache.spark.sql.DataFrame, epoch: Long): Unit =
+    StoreEpoch(st, "chunkindex", batch, epoch)(_.appendClustered(
+      chunkIndexRows(batch), Seq("kind", "w", "doc_id", "chunk_id")))
 
   /** Create the (empty) chunk-index table [[chunkIndexIngestEpoch]]
     * appends to. */

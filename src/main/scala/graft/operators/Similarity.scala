@@ -841,21 +841,9 @@ object Similarity {
     * epoch ledger. */
   private[graft] def ivfIngestEpoch(st: graft.sources.TableStore,
       compactLimit: Option[Int] = None)(
-      batch: DataFrame, epoch: Long): Unit = {
-    if (st.batchCommitted("ivf", epoch)) return
-    // persist before the range layout — repartitionByRange's sampling
-    // job would otherwise re-run the component explode per epoch
-    val rows = ivfRows(batch).persist()
-    try st.appendBatch("ivf", epoch,
-      Dedup.bucketLayout(rows, 8, "kind", "label", "vec_id", "i"))
-    finally { rows.unpersist(); () }
-    // shared auto-compaction policy (one helper across the state/index/
-    // ivf stores — ADVICE r15 #3): layout-preserving collapse, ledger
-    // survives, stats handed to the CBO after the collapse; compactLimit
-    // threads a per-caller policy without touching the session conf
-    Dedup.maybeAutoCompactClustered(batch.sparkSession, st, "ivf",
-      Seq("kind", "label", "vec_id", "i"), compactLimit)
-  }
+      batch: DataFrame, epoch: Long): Unit =
+    StoreEpoch(st, "ivf", batch, epoch)(_.appendClustered(ivfRows(batch),
+      Seq("kind", "label", "vec_id", "i"), compactLimit))
 
   /** Create the (empty) list table [[ivfIngestEpoch]] appends to. */
   private[graft] def buildIvfStore(st: graft.sources.TableStore,
@@ -1072,14 +1060,17 @@ object Similarity {
       // ONE pinned store-wide assignment feeds the pre-probe AND (when
       // the threshold fires) the recluster's first Lloyd step — the
       // probe's argmin over the same snapshot IS that step, so the
-      // policy never pays the assignment join twice per fire
+      // policy never pays the assignment join twice per fire; its blocks
+      // are released once the post-probe has run
       val assign = Dedup.pin(ivfCurrentAssign(st))
-      val (n, mis, ppm) = stats(ivfMisassignmentFrom(st, assign))
-      val maintain = epoch == 0L || ppm > limit
-      if (maintain) reclusterIvf(st, precomputedAssign = Some(assign))
-      val (_, postMis, postPpm) =
-        if (maintain) stats(ivfMisassignment(st)) else (n, mis, ppm)
-      (n, mis, ppm, maintain && epoch > 0L, postMis, postPpm)
+      try {
+        val (n, mis, ppm) = stats(ivfMisassignmentFrom(st, assign))
+        val maintain = epoch == 0L || ppm > limit
+        if (maintain) reclusterIvf(st, precomputedAssign = Some(assign))
+        val (_, postMis, postPpm) =
+          if (maintain) stats(ivfMisassignment(st)) else (n, mis, ppm)
+        (n, mis, ppm, maintain && epoch > 0L, postMis, postPpm)
+      } finally StoreEpoch.unpin(assign)
     }
   }
 
@@ -1141,7 +1132,7 @@ object Similarity {
 
   /** q210: the maintained IVF index under a REAL `writeStream` — the
     * ANN sibling of q209: the embedding stream drives
-    * [[graft.streaming.IndexIngest.ivfIngestSink]] over a
+    * [[ivfIngestEpoch]] as its foreachBatch sink over a
     * strictly-sliced staged file replay (vec_id slices, aligned files,
     * AvailableNow), so the stream wiring is on the oracle-gated path;
     * q208 covers the direct-epoch-call build with a mid-run compaction.
@@ -1162,7 +1153,7 @@ object Similarity {
       val st = new graft.sources.TableStore(s, storeRoot.toString)
       buildIvfStore(st, vecs.limit(0))
       EventsOps.stagedReplayDrive(s, vecs, "vec_id", rowsPerFile, slices,
-        "q210_ivf_sink")(graft.streaming.IndexIngest.ivfIngestSink(st))
+        "q210_ivf_sink")(ivfIngestEpoch(st))
       // pinned: the store root is deleted in the finally below
       Dedup.pin(ivfProbe(st, nQueries = 20, k = 3))
     } finally EventsOps.rmTree(storeRoot)

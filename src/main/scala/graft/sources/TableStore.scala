@@ -1900,10 +1900,17 @@ final class TableStore(spark: SparkSession, root: String) {
         "time and would be missing from a raw catalog scan — compact() first")
     // store-unique catalog name: maintained stores live in per-store
     // roots (often tempdirs), and two stores compacting a same-named
-    // table concurrently must not fight over one catalog entry
-    val cat = s"graft_cbo_${name}_${Integer.toHexString(root.hashCode)}"
-    spark.sql(s"DROP TABLE IF EXISTS `$cat`")
-    spark.sql(s"CREATE TABLE `$cat` USING parquet LOCATION '${dataPath(name, v)}'")
+    // table concurrently must not fight over one catalog entry. The
+    // VERSION is part of the name, so an entry's LOCATION never changes:
+    // each session caches a catalog table's resolved file listing, and a
+    // re-pointed entry would leave every OTHER session that read it
+    // (a caller's handle vs a stream epoch's re-homed one) listing
+    // files a later vacuum deleted
+    val cat = s"graft_cbo_${name}_${Integer.toHexString(root.hashCode)}_v$v"
+    // the entry the marker names (an earlier version's, or this one's)
+    // gives way to the new one
+    cboMarker(name).foreach { case (old, _) => spark.sql(s"DROP TABLE IF EXISTS `$old`") }
+    spark.sql(s"CREATE TABLE IF NOT EXISTS `$cat` USING parquet LOCATION '${dataPath(name, v)}'")
     val colSpec =
       if (cols.isEmpty) "FOR ALL COLUMNS"
       else s"FOR COLUMNS ${cols.map(c => s"`$c`").mkString(", ")}"
@@ -1923,26 +1930,30 @@ final class TableStore(spark: SparkSession, root: String) {
 
   private def cboFile(name: String) = Paths.get(s"$root/$name/cbo.cat")
 
+  /** (catalog table, version) the marker names; None when absent or torn. */
+  private def cboMarker(name: String): Option[(String, String)] = {
+    val p = cboFile(name)
+    if (!Files.exists(p)) None
+    else scala.util.Try(new String(Files.readAllBytes(p)).trim.split("\t", -1))
+      .toOption.collect { case Array(cat, ver) => (cat, ver) }
+  }
+
   /** The catalog-backed read for a version that was CBO-registered: same
     * files, but the relation carries ANALYZE'd statistics. Any append or
     * rewrite bumps the version and silently falls back to the plain
     * path read until the next registration — stats can go missing, never
     * stale. */
-  private def cboTable(name: String, v: Int): Option[DataFrame] = {
-    val p = cboFile(name)
-    if (!Files.exists(p)) return None
+  private def cboTable(name: String, v: Int): Option[DataFrame] =
     // Try-wrapped end to end: a torn/corrupt marker (or any catalog
     // hiccup) degrades to the plain path read — stats can go missing,
     // never break table()
-    scala.util.Try {
-      new String(Files.readAllBytes(p)).trim.split("\t", -1) match {
-        case Array(cat, ver) if ver.toInt == v && spark.catalog.tableExists(cat) &&
-            catalogLocationIs(cat, dataPath(name, v)) =>
-          Some(spark.table(cat))
-        case _ => None
-      }
-    }.toOption.flatten
-  }
+    cboMarker(name).flatMap { case (cat, ver) =>
+      scala.util.Try {
+        if (ver.toInt == v && spark.catalog.tableExists(cat) &&
+            catalogLocationIs(cat, dataPath(name, v))) Some(spark.table(cat))
+        else None
+      }.toOption.flatten
+    }
 
   /** Does catalog table `cat` point at exactly `path`? The catalog name
     * embeds only a 32-bit hash of the store root, so two roots with a

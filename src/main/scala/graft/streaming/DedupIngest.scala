@@ -1,102 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.sources.TableStore
 
-/** Continuous DEDUPLICATING corpus ingest — the capstone composition of
-  * the suite's pieces: each micro-batch of documents is near-dup-checked
-  * (MinHash+LSH band join, exact hashed-Jaccard verify) against the
-  * PERSISTED corpus signature store and against itself, only the keepers
-  * are appended to the corpus, and the store's signatures are extended
-  * with those keepers — every step idempotent on the Structured Streaming
-  * epoch id, so the whole pipeline is exactly-once end to end.
-  *
-  * Store layout (one [[TableStore]], the pruned layout of
-  * `Dedup.buildSignatureStore`): `corpus` = published documents, `shh` =
-  * (doc_id, h) shingle hashes range-laid-out on doc_id (candidate-id
-  * file pruning), `bands` = (doc_id, n, band, bv, bkt) band rows
-  * range-laid-out on their band bucket — so each epoch's store reads
-  * file-prune to their probe sets — and `sig` = raw (doc_id, n, h0..h15)
-  * signatures. `sig` doubles as the membership marker and commits LAST,
-  * so every crash window replays to the same converged state:
-  *  - crash after `corpus`: replay recomputes the same keeper set
-  *    (shh/bands/sig unchanged), corpus no-ops on its ledger, the rest
-  *    apply;
-  *  - crash after `corpus`+`shh` (or +`bands`): replay recomputes with
-  *    the batch's hash/band rows already stored — the verification
-  *    intersection stays exact (countDistinct in the verifier) and
-  *    self-pairs are excluded by doc-id inequality — the committed
-  *    tables no-op on their ledgers, `sig` finally applies.
-  *
-  * Scale posture: per batch, shingle/minhash work is proportional to the
-  * batch; the corpus contributes exactly 3 store reads — the sig
-  * membership anti-join plus the kernel's 2 bucket-pruned scans
-  * (DedupSinkPlanSpec pins the count); appended versions are O(batch)
-  * manifest entries ([[TableStore.appendBatch]]); [[TableStore.compact]]
-  * collapses long chains offline.
-  */
 object DedupIngest {
-
-  /** Wire as `docs.writeStream.foreachBatch(dedupIngestSink(store))`.
-    * Tables `corpus`/`sig`/`shh`/`bands` must exist (create via
-    * `Dedup.buildSignatureStore` + a `corpus` create, possibly empty). */
-  def dedupIngestSink(store: TableStore): (DataFrame, Long) => Unit =
-    (batch0, epochId) => {
-      val batch = batch0.cache()
-      try {
-        // drop docs already published (makes replays of a partially
-        // committed epoch converge instead of re-deduping stored docs).
-        // Persisted: newDocs is referenced by the pair kernel, the id
-        // frames below and the keeper build — without a cache each
-        // reference re-runs the anti-join and re-SCANS the stored sig
-        // table (the q199-kernel lesson applied to the library sink;
-        // DedupSinkPlanSpec counts the epoch's executed store scans, so
-        // removing this cache fails the build);
-        // newDocs is batch-bounded, so caching it is cheap.
-        val newDocs = batch.join(
-          store.table("sig").select("doc_id"), Seq("doc_id"), "left_anti")
-          .cache()
-        try {
-          val pairs = Dedup.incrementalLshPairs(batch.sparkSession, store, newDocs)
-            .select("doc_a", "doc_b")
-          val ids = newDocs.select("doc_id")
-          // a batch doc is a DUP if it pairs with a smaller batch doc
-          // (keep-first within the batch: pairs are doc_a < doc_b, so any
-          // batch doc_b loses) or with ANY corpus doc — the published doc
-          // stays regardless of id order, so a batch doc_a whose partner
-          // doc_b is NOT in the batch is also a dup
-          val dupB = pairs.join(ids.toDF("doc_b"), Seq("doc_b"), "left_semi")
-            .select(col("doc_b").as("doc_id"))
-          val dupA = pairs.join(ids.toDF("doc_a"), Seq("doc_a"), "left_semi")
-            .join(ids.toDF("doc_b"), Seq("doc_b"), "left_anti")
-            .select(col("doc_a").as("doc_id"))
-          // cache: the appends below would otherwise re-run the whole
-          // band-join/verify pipeline once each
-          val keep = newDocs.join(
-            dupB.unionByName(dupA).distinct(), Seq("doc_id"), "left_anti").cache()
-          try {
-            store.appendBatch("corpus", epochId, keep)
-            val (sig, shh) = Dedup.signatureFrames(keep)
-            store.appendBatch("shh", epochId, Dedup.sinkShhLayout(shh))
-            store.appendBatch("bands", epochId, Dedup.sinkBandsLayout(sig))
-            store.appendBatch("sig", epochId, sig) // membership marker: LAST
-            // auto-compaction policy (VERDICT r14 next #4): a continuous
-            // ingest loop must not depend on remembering offline
-            // maintenance. When any chain reaches
-            // spark.graft.state.autoCompactVersions versions (default 16;
-            // 0 disables — conf read off the BATCH's session, the
-            // stream-scoped one), collapse the store with the layout-
-            // restoring compaction; ledgers survive, so replays still
-            // no-op, and results are unchanged by construction.
-            val limit = Dedup.autoCompactLimit(batch.sparkSession)
-            if (limit > 0 && store.chainLength("sig") >= limit)
-              Dedup.compactSignatureStore(store)
-          } finally keep.unpersist()
-        } finally { newDocs.unpersist(); () }
-      } finally { batch.unpersist(); () }
-    }
 
   /** Continuous CLUSTER maintenance — the q203 epoch as a streaming sink:
     * wire as `docs.writeStream.foreachBatch(clusterIngestSink(store))`.
@@ -112,11 +20,11 @@ object DedupIngest {
     * q204's canonical pick and q205's savings report. Read labels back
     * any time with
     * `Dedup.clusterLabels(store)` — maintenance (auto-compaction rides
-    * the same policy conf as the dedup sink) never changes them. */
+    * the same policy conf as the dedup epoch) never changes them. */
   /** `card` optionally stamps typed per-doc rows into a side TABLE (the
     * q214 dataset-card sidecar: batch => rows for `appendBatch(cardTable,
     * epoch, ...)`) AFTER the state flip, on the card table's own ledger —
-    * the dedup sink's multi-table discipline: a crash between the two
+    * a crash between the two
     * appends replays to state-no-op + card-apply, so the pair
     * converges. Create the card table (possibly empty) first. */
   def clusterIngestSink(store: TableStore,
@@ -127,7 +35,7 @@ object DedupIngest {
       // persist: the epoch evaluates the batch at least twice (its
       // signature frames and the optional meta sidecar), and a source
       // with expensive upstream transforms must not recompute them per
-      // reference (ADVICE r15 #4 — the dedupIngestSink discipline)
+      // reference (ADVICE r15 #4)
       val batch = batch0.cache()
       try {
         Dedup.clusterIngestEpoch(store, meta)(batch, epochId)

@@ -75,7 +75,7 @@ class ContamIngestSpec extends SparkSpec {
       val ckpt = tempDir("graft-contam-ckpt").toString
       val q = input.toDF().toDF("doc_id", "text").writeStream
         .option("checkpointLocation", ckpt)
-        .foreachBatch(graft.streaming.ContamIngest.contamIngestSink(st, bench, prune))
+        .foreachBatch(CorpusOps.decontamIngestEpoch(st, bench, prune) _)
         .start()
       try {
         val rows = docs.filter(col("doc_id") >= 50)
@@ -115,7 +115,7 @@ class ContamIngestSpec extends SparkSpec {
           .writeStream.outputMode("append")
           .option("checkpointLocation", ckpt.toString)
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-            graft.streaming.ContamIngest.contamIngestSink(st, bench, prune)(batch, epoch)
+            CorpusOps.decontamIngestEpoch(st, bench, prune)(batch, epoch)
             applied :+= epoch
             if (crashAfter.contains(epoch))
               throw new RuntimeException("injected crash: store committed, marker not")

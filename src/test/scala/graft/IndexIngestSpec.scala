@@ -139,7 +139,7 @@ class IndexIngestSpec extends SparkSpec {
     val ckpt = tempDir("graft-index-ckpt").toString
     val q = input.toDF().toDF("doc_id", "text").writeStream
       .option("checkpointLocation", ckpt)
-      .foreachBatch(graft.streaming.IndexIngest.indexIngestSink(st))
+      .foreachBatch(SearchOps.indexIngestEpoch(st) _)
       .start()
     try {
       input.addData(1L -> "alpha beta gamma", 2L -> "beta delta")
@@ -172,7 +172,7 @@ class IndexIngestSpec extends SparkSpec {
           .writeStream.outputMode("append")
           .option("checkpointLocation", ckpt.toString)
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-            graft.streaming.IndexIngest.indexIngestSink(st)(batch, epoch)
+            SearchOps.indexIngestEpoch(st)(batch, epoch)
             applied :+= epoch
             if (crashAfter.contains(epoch))
               throw new RuntimeException("injected crash: store committed, marker not")
@@ -253,7 +253,7 @@ class IndexIngestSpec extends SparkSpec {
     val ckpt = tempDir("graft-chunk-ckpt").toString
     val q = input.toDF().toDF("doc_id", "text").writeStream
       .option("checkpointLocation", ckpt)
-      .foreachBatch(graft.streaming.IndexIngest.chunkIndexIngestSink(st))
+      .foreachBatch(SearchOps.chunkIndexIngestEpoch(st) _)
       .start()
     try {
       // long docs (>64 tokens) so chunking genuinely splits; the probe

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Similarity
+import graft.operators.{Dedup, Similarity}
 import graft.sources.TableStore
 
 /** Maintained IVF index (q208): read-free list appends, the probed-
@@ -83,6 +83,52 @@ class IvfIngestSpec extends SparkSpec {
       Array.tabulate(64)(j => ((id * 31 + j * 7) % 97).toFloat / 97f))
   }
 
+  test("maintained-store epochs release every frame they persist or pin") {
+    // each epoch scope releases exactly the frames it materialized, so
+    // the context's persisted-RDD set is back where it started after
+    // EVERY epoch — without waiting for a GC to let the ContextCleaner
+    // drop an unreleased pin
+    val base = "the quick brown fox jumps over the lazy dog again and again today friends"
+    def docBatch(e: Int) = ((0 until 5).map { i =>
+      val id = e * 100L + i
+      (id, s"epoch $e doc $i " + Seq.tabulate(10)(j => s"w${id}_$j").mkString(" "))
+    } :+ ((e * 100L + 50L, base))).toDF("doc_id", "text")
+    def stateStore(): TableStore = {
+      val st = new TableStore(spark, tempDir("graft-epoch-release").toString)
+      Dedup.buildDedupState(st, docBatch(0).limit(0))
+      st
+    }
+    def ivfStore(): TableStore = {
+      val st = new TableStore(spark, tempDir("graft-epoch-release-ivf").toString)
+      Similarity.buildIvfStore(st,
+        Seq.empty[(Long, Int, Array[Float])].toDF("vec_id", "label", "embedding"))
+      st
+    }
+    val cases: Seq[(String, () => Int => Unit)] = Seq(
+      "dedup" -> { () => val st = stateStore()
+        (e: Int) => Dedup.dedupIngestEpoch(st)(docBatch(e), e.toLong) },
+      "cluster" -> { () => val st = stateStore()
+        (e: Int) => Dedup.clusterIngestEpoch(st)(docBatch(e), e.toLong) },
+      "managed IVF" -> { () => val st = ivfStore()
+        (e: Int) => {
+          Similarity.ivfIngestEpochManaged(st, Some(Similarity.DriftLimitPpm))(
+            vecRows(e * 8L until (e + 1) * 8L).toDF("vec_id", "label", "embedding"),
+            e.toLong)
+          ()
+        } })
+    val sc = spark.sparkContext
+    cases.foreach { case (store, setUp) =>
+      val epoch = setUp()
+      val before = sc.getPersistentRDDs.keySet
+      (0 until 4).foreach { e =>
+        epoch(e)
+        withClue(s"$store epoch $e left persisted RDDs: ") {
+          (sc.getPersistentRDDs.keySet -- before) shouldBe empty
+        }
+      }
+    }
+  }
+
   test("a live stream maintains the IVF lists through the foreachBatch sink") {
     implicit val sqlCtx = spark.sqlContext
     val st = new TableStore(spark, tempDir("graft-ivf-live").toString)
@@ -93,7 +139,7 @@ class IvfIngestSpec extends SparkSpec {
     val ckpt = tempDir("graft-ivf-live-ckpt").toString
     val q = input.toDF().toDF("vec_id", "label", "embedding").writeStream
       .option("checkpointLocation", ckpt)
-      .foreachBatch(graft.streaming.IndexIngest.ivfIngestSink(st))
+      .foreachBatch(Similarity.ivfIngestEpoch(st) _)
       .start()
     try {
       input.addData(vecRows(0L until 8L): _*)
@@ -124,7 +170,7 @@ class IvfIngestSpec extends SparkSpec {
           .writeStream.outputMode("append")
           .option("checkpointLocation", ckpt.toString)
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, epoch: Long) =>
-            graft.streaming.IndexIngest.ivfIngestSink(st)(batch, epoch)
+            Similarity.ivfIngestEpoch(st)(batch, epoch)
             applied :+= epoch
             if (crashAfter.contains(epoch))
               throw new RuntimeException("injected crash: store committed, marker not")
